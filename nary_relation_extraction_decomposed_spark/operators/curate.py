@@ -5,8 +5,8 @@ deterministic stratified sampling.
 Every stage is deterministic (re-running yields the identical corpus, the
 property that makes a 100 TB curation run auditable and resumable):
 
-1. quality gate   — quality_score_col >= min_quality; pure scan-side
-                    filter, zero shuffle.
+1. quality gate   — text IS NOT NULL and quality_score_col >= min_quality;
+                    pure scan-side filter, zero shuffle.
 2. exact dedup    — min-id survivor per md5(text) group (the same rule as
                     operators/dedup.exact_dedup), applied as an ANTI-join
                     on the DROPPED ids: the (id, md5) proxy rows decide the
@@ -82,8 +82,12 @@ def curate_corpus(
     # lineage-truncated so one action executes the regex gate and the
     # dedup chain once, not once per downstream reference (measured 2x
     # wall on the 80k-doc scaling probe before truncation)
+    # the null check is explicit: quality_score_col(NULL) is 0.9, not NULL
+    # (F.least skips the NULL token counts), so the score alone keeps
+    # null-text docs at any min_quality <= 0.9
     quality = docs.filter(
-        quality_score_col(F.col(text_col)) >= F.lit(min_quality)
+        F.col(text_col).isNotNull()
+        & (quality_score_col(F.col(text_col)) >= F.lit(min_quality))
     ).localCheckpoint(eager=False)
 
     # Exact dedup on the (id, md5) PROXY rows (guide §8: decide with small
@@ -91,7 +95,11 @@ def curate_corpus(
     # the DROPPED ids, anti-join them back. The text column crosses no
     # exchange — the previous left_semi on the kept ids shuffled every
     # surviving (id, text) row by id. Same survivor rule as
-    # dedup.exact_dedup: min(id) per md5 group.
+    # dedup.exact_dedup: min(id) per md5 group. Relies on the quality gate
+    # having dropped every null-text row: md5(NULL) never matches the
+    # inner join, so a null-text doc reaching here would skip the min-id
+    # rule and every such doc would survive (pinned by
+    # tests/test_curate.py::test_null_text_never_survives).
     hashes = quality.select(F.col(id_col), F.md5(F.col(text_col)).alias("_md5"))
     keep = hashes.groupBy("_md5").agg(F.min(id_col).alias("_keep"))
     dropped_exact = (

@@ -37,10 +37,12 @@ def word_ngrams_col(text: Column, n: int) -> Column:
     if n == 1:
         grams = toks
     else:
-        idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(0)))
-        grams = F.transform(
+        idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
+        # sequence(1, k) counts DOWN for k < 1 and slice(toks, 0, n)
+        # raises, so a text of fewer than n tokens has no n-gram at all
+        grams = F.when(F.size(toks) >= n, F.transform(
             idx, lambda i: F.array_join(F.slice(toks, i, n), " ")
-        )
+        )).otherwise(F.array().cast("array<string>"))
     return F.array_sort(F.array_distinct(grams))
 
 

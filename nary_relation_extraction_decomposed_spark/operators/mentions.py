@@ -316,74 +316,6 @@ def analyze_sentences(docs: DataFrame, pred_vocab: list[str]) -> DataFrame:
     return docs.select("url", "text").mapInPandas(batches, schema=SENTENCES_SCHEMA)
 
 
-def detect_and_analyze_tagged(
-    docs: DataFrame, gazetteer: DataFrame, pred_vocab: list[str]
-) -> DataFrame:
-    """FUSED mention detection + sentence analysis in ONE docs pass,
-    emitting the tagged row stream (graph.TAGGED_SCHEMA: kind 0 = sentence
-    rows with n_tokens+pred, kind 1 = FULL mention rows) that
-    doc_graph_subrels_tagged consumes directly. Halves the Python crossings
-    of the mentions+sentences stages and removes their union; because
-    mention rows carry every MENTIONS_SCHEMA column, `mentions_view` /
-    `sentences_view` below recover the unfused frames by pure filter+
-    project — so the fused pass can also feed ER and result surfaces
-    (run_pipeline's default path). The unfused operators remain for
-    per-stage checkpointing."""
-    sc = docs.sparkSession.sparkContext
-    bc = sc.broadcast(build_gazetteer_index(gazetteer))
-    vocab = frozenset(pred_vocab)
-    m_cols = ["mention_id", "ent_id", "ent_type", "surface", "surface_norm",
-              "begin", "end", "tok_begin", "tok_end"]
-    s_cols = ["n_tokens", "pred", "preds", "pred_toks"]
-    cols = ["url", "kind", "sent_id", *m_cols, *s_cols]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gaz = bc.value
-        for pdf in it:
-            out: dict[str, list] = {c: [] for c in cols}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                if not isinstance(text, str):
-                    text = ""
-                for s in sentence_predicates(text, vocab):
-                    out["url"].append(url)
-                    out["kind"].append(0)
-                    out["sent_id"].append(s["sent_id"])
-                    for c in m_cols:
-                        out[c].append(None)
-                    for c in s_cols:
-                        out[c].append(s[c])
-                if text:
-                    for m in detect_mentions_in_text(text, gaz):
-                        out["url"].append(url)
-                        out["kind"].append(1)
-                        out["sent_id"].append(m["sent_id"])
-                        for c in m_cols:
-                            out[c].append(m[c])
-                        for c in s_cols:
-                            out[c].append(None)
-            yield pd.DataFrame(out, columns=cols)
-
-    from .graph import TAGGED_SCHEMA
-
-    return docs.select("url", "text").mapInPandas(batches, schema=TAGGED_SCHEMA)
-
-
-def mentions_view(tagged: DataFrame) -> DataFrame:
-    """Recover the MENTIONS_SCHEMA frame from a tagged stream — pure
-    filter + project, no Python."""
-    return tagged.filter(F.col("kind") == 1).select(
-        "url", "mention_id", "ent_id", "ent_type", "surface",
-        "surface_norm", "begin", "end", "sent_id", "tok_begin", "tok_end",
-    )
-
-
-def sentences_view(tagged: DataFrame) -> DataFrame:
-    """Recover the SENTENCES_SCHEMA frame from a tagged stream."""
-    return tagged.filter(F.col("kind") == 0).select(
-        "url", "sent_id", "n_tokens", "pred", "preds", "pred_toks"
-    )
-
-
 def doc_sentence_counts(sentences: DataFrame) -> DataFrame:
     """(url, n_sents) from the sentence table — partial aggregation
     (map-side combine) is automatic for count()."""

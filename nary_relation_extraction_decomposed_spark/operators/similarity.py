@@ -20,10 +20,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql.functions import broadcast
 
-# topmost Exchange line of a physical-plan string, e.g.
-# "Exchange hashpartitioning(id#5L, 64), REPARTITION_BY_COL, [plan_id=7]"
-_RE_TOP_EXCHANGE = re.compile(
-    r"Exchange hashpartitioning\((.+?), (\d+)\)([^\n]*)"
+# an explicit, AQE-exempt repartition(n, key) as a physical-plan line, e.g.
+# "+- Exchange hashpartitioning(id#5L, 64), REPARTITION_BY_NUM, [plan_id=7]"
+# (the prefix excludes BroadcastExchange / ReusedExchange lines)
+_RE_REPARTITION_BY_NUM = re.compile(
+    r"^[\s|:+-]*Exchange hashpartitioning\((.+?), (\d+)\), REPARTITION_BY_NUM\b"
 )
 
 
@@ -34,29 +35,30 @@ def _widen_if_narrow(df: DataFrame, key_col: str) -> DataFrame:
 
     `df.rdd.getNumPartitions()` on an exchange-bearing plan materializes
     every upstream query stage under AQE just to read a count — the chain
-    would execute once for the probe and again for the real action (review
-    r6 cont.). So: probe the width only when the initial physical plan is
-    exchange-free (scans / narrow chains / localCheckpoints — the
-    motivating under-partitioned cases, where .rdd is split arithmetic);
-    for exchange-bearing chains repartition — the explicit exchange is
-    AQE-coalesce-exempt (kills the small-shuffle starvation pattern) and
-    clusters by `key_col`, which every caller's downstream groupBy/window
-    reuses, and it is strictly cheaper than the probe's full double
-    execution — UNLESS the plan's topmost exchange is already an explicit
-    repartition by exactly `key_col` at >= defaultParallelism (ADVICE r6:
-    an input that just explicitly shuffled wide on the same key was paying
-    a second full exchange here, and possibly a width DOWNSHIFT). Only
-    explicit-repartition (REPARTITION_BY_NUM/_COL) exchanges qualify: they are
-    AQE-exempt, so the printed width is the runtime width — a groupBy/join
-    exchange's printed width is pre-coalesce fiction."""
+    would execute once for the probe and again for the real action. So the
+    width is probed only when the physical plan is exchange-free (scans /
+    narrow chains / localCheckpoints — the motivating under-partitioned
+    cases, where .rdd is split arithmetic). The plan read is executedPlan
+    (AQE's initial plan: EnsureRequirements has inserted the groupBy/join/
+    sort exchanges, nothing has run); sparkPlan would show only explicit
+    repartitions. Exchange-bearing chains are repartitioned — the explicit
+    exchange is AQE-coalesce-exempt (kills the small-shuffle starvation
+    pattern) and clusters by `key_col`, which every caller's downstream
+    groupBy/window reuses — UNLESS the topmost exchange (the first
+    Exchange line of any kind) is already repartition(n, key_col) with
+    n >= defaultParallelism and REPARTITION_BY_NUM: the only exchange whose
+    printed width is the runtime width. AQE may coalesce REPARTITION_BY_COL
+    (no explicit n) and ENSURE_REQUIREMENTS exchanges, and a range or
+    single-partition exchange above the repartition reshapes its output."""
     nparts = df.sparkSession.sparkContext.defaultParallelism
-    plan = df._jdf.queryExecution().sparkPlan().toString()
+    plan = df._jdf.queryExecution().executedPlan().toString()
     if "Exchange" not in plan:
         if df.rdd.getNumPartitions() >= nparts:
             return df
         return df.repartition(nparts, F.col(key_col))
-    m = _RE_TOP_EXCHANGE.search(plan)
-    if m and "REPARTITION_BY_" in m.group(0):  # BY_NUM / BY_COL, both AQE-exempt
+    top = next(line for line in plan.splitlines() if "Exchange" in line)
+    m = _RE_REPARTITION_BY_NUM.match(top)
+    if m:
         cols = [c.strip().split("#")[0] for c in m.group(1).split(",")]
         if cols == [key_col] and int(m.group(2)) >= nparts:
             return df

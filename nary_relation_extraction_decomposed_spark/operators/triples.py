@@ -223,83 +223,6 @@ def rejoin_nary(
     return _canonicalize_and_support(pairs, canon_map, url_level)
 
 
-def rejoin_triples_grouped(
-    subrels: DataFrame,
-    pred_rules: DataFrame,
-    canon_map: DataFrame | None = None,
-) -> DataFrame:
-    """Semantically identical to rejoin_triples, different physical shape:
-    ONE ObjectHashAggregate shuffle on (url, pivot_mid, pred) collecting the
-    per-slot argument lists, then the n-ary instance cross product expands
-    IN-ARRAY (bounded: arguments per document are capped upstream at
-    MAX_MENTIONS_PER_DOC); subrels is consumed exactly once, so no lineage
-    checkpoint is needed.
-
-    MEASURED (5.3M subrels, local[16], warm): 12.2 s vs 7.7 s for the SMJ
-    path — collect_list aggregation is object-based (no whole-stage
-    codegen) and loses to the codegen'd sort-merge join despite the extra
-    shuffle, so rejoin_triples stays the default. Kept as the measured
-    alternative (the trade flips when shuffle I/O, not CPU, is the
-    bottleneck — e.g. wide rows or remote shuffle storage); equivalence is
-    pinned by tests/test_nary_arity.py::test_grouped_rejoin_equivalent.
-    """
-    grouped = (
-        subrels.filter(F.col("slot").isin("a", "b"))
-        .groupBy("url", "pivot_mid", "pred")
-        .agg(
-            F.first("pivot_norm").alias("pivot_norm"),
-            F.collect_list(
-                F.when(F.col("slot") == "a",
-                       F.struct("other_norm", "subrel"))
-            ).alias("a_list"),
-            F.collect_list(
-                F.when(F.col("slot") == "b",
-                       F.struct("other_norm", "subrel"))
-            ).alias("b_list"),
-        )
-        .filter((F.size("a_list") > 0) & (F.size("b_list") > 0))
-    )
-    cross = F.flatten(
-        F.transform(
-            F.col("a_list"),
-            lambda a: F.transform(
-                F.col("b_list"),
-                lambda b: F.struct(
-                    a["other_norm"].alias("a_norm"),
-                    a["subrel"].alias("subrel_a"),
-                    b["other_norm"].alias("b_norm"),
-                    b["subrel"].alias("subrel_b"),
-                ),
-            ),
-        )
-    )
-    inst = grouped.select(
-        "url", "pivot_norm", "pred", F.explode(cross).alias("i")
-    ).select(
-        "url", "pivot_norm", "pred",
-        "i.a_norm", "i.subrel_a", "i.b_norm", "i.subrel_b",
-    )
-    joined = inst.join(broadcast(pred_rules), ["subrel_a", "subrel_b"])
-    pairs = joined.select(
-        "url",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("pivot_norm").alias("subj_norm"),
-                    F.col("pred_a").alias("pred"),
-                    F.col("a_norm").alias("obj_norm"),
-                ),
-                F.struct(
-                    F.col("pivot_norm").alias("subj_norm"),
-                    F.col("pred_b").alias("pred"),
-                    F.col("b_norm").alias("obj_norm"),
-                ),
-            )
-        ).alias("t"),
-    ).select("url", "t.subj_norm", "t.pred", "t.obj_norm")
-    return _canonicalize_and_support(pairs, canon_map)
-
-
 def pairs_to_triples(
     pairs: DataFrame,
     canon_map: DataFrame | None = None,

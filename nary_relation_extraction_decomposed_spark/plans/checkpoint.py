@@ -53,7 +53,10 @@ from pyspark.sql import SparkSession
 # gazetteer/rule-table CONTENT now chains into the mentions/pairs/triples
 # fingerprints (pre-v3 manifests could silently replay triples built from a
 # different rule table), plus the fused pairs->triples checkpoint lane.
-ENGINE_VERSION = 3
+# v4 = one stage graph for both runners: the default lane checkpoints
+# docs -> combined -> canon -> triples (the mentions/sentences/evidence/
+# subrels stages are gone; they are views of combined).
+ENGINE_VERSION = 4
 
 
 def fingerprint(*parts: str) -> str:
@@ -133,11 +136,10 @@ class HadoopFS:
 class StageCheckpointer:
     spark: SparkSession
     root: str
-    enabled: bool = True
     stats: dict[str, dict] = field(default_factory=dict)
 
     def __post_init__(self):
-        self._fs = HadoopFS(self.spark, self.root) if self.enabled else None
+        self._fs = HadoopFS(self.spark, self.root)
 
     def _paths(self, stage: str) -> tuple[str, str]:
         d = posixpath.join(self.root, stage)
@@ -155,10 +157,6 @@ class StageCheckpointer:
         """Return (df, fingerprint). Skips the build when a committed
         manifest matches the input fingerprint."""
         fp = fingerprint(input_fp, stage, str(ENGINE_VERSION))
-        if not self.enabled:
-            df = build()
-            self.stats[stage] = {"skipped": False, "cached": False}
-            return df, fp
         data_dir, manifest_path = self._paths(stage)
         m = self._read_manifest(manifest_path)
         if m is not None and m.get("committed") and m.get("input_fingerprint") == fp:

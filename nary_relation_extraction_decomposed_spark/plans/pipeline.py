@@ -1,28 +1,37 @@
-"""End-to-end KG-construction pipeline.
+"""End-to-end KG-construction pipeline, defined ONCE as a stage list.
 
 pages(url, warc_ts, html, text, lang)
   -> filter (lang/null, pre-UDF so it pushes into the scan)
-  -> dedup latest per url (deterministic row_number)
   -> resolve text (frozen extractor, mapInPandas; drops html)
-  -> FUSED combined pass (default): mention detection + sentence analysis
-     + per-doc graph BFS in ONE mapInPandas (broadcast gazetteer) — zero
-     shuffles docs->evidence, since dedup leaves one row per url;
-     mentions/sentences/evidence recovered by filter+project. Unfused
-     staged path kept for checkpointing (and for tagged streams whose
-     per-url rows arrive scattered: graph.doc_graph_subrels_tagged).
-     Enriched graph: co-mention + token-window edges, default ON.
-  -> binary sub-relations (DataFrame joins; this IS the n-ary decomposition)
+  -> dedup latest per url (max(struct(warc_ts, length, text)) per url,
+     see textprep.dedup_latest_text)
+  -> combined doc pass: mention detection + sentence analysis + per-doc
+     graph BFS + decomposition attributes in ONE mapInPandas (broadcast
+     gazetteer) — zero shuffles docs->evidence, since dedup leaves one row
+     per url; mentions/sentences/evidence/subrels are filter+project views
+     of it. Enriched graph: co-mention + token-window edges, default ON.
   -> ER canonical map (MinHash-LSH + connected components)
   -> rejoin into (subj, pred, obj) triples + support
 
-Every stage is a DataFrame in -> DataFrame out function; plans/checkpoint.py
-wraps stages with the per-stage parquet checkpoint + manifest for
-kill-resume.
+Stage graph (stage: fingerprint parents; canon only with canonicalize):
+
+  default lane       docs: config -> combined: docs, gazetteer
+                     -> canon: combined -> triples: combined, canon, rules
+  fused_rejoin lane  docs: config -> pairs: docs, gazetteer, rules
+                     -> mentions: docs, gazetteer -> canon: mentions
+                     -> triples: pairs, canon
+
+run_pipeline builds the list in order; run_pipeline_checkpointed wraps
+every build in StageCheckpointer.run_stage (plans/checkpoint.py: per-stage
+parquet + manifest, kill-resume). Both runners read the same list, so they
+run the same operators under every PipelineConfig.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from collections.abc import Callable
+from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame
 
@@ -66,42 +75,31 @@ class PipelineConfig:
     # see operators/kernels.bfs_evidence
     co_mention_edges: bool = True
     token_window: int | None = TOKEN_WINDOW
-    # fused default: detection + sentence analysis + graph BFS run in ONE
-    # mapInPandas over the deduped docs (zero shuffles docs->evidence;
-    # valid because dedup leaves one row per url); mentions/sentences/
-    # evidence/ER all recover from the combined stream by filter+project.
-    # The checkpointed runner keeps unfused stages unless fused_rejoin is
-    # set (then it checkpoints the pairs lane; see
-    # run_pipeline_checkpointed).
-    fused: bool = True
     # round 6: ALSO fuse decompose + rejoin + per-doc triple dedup into the
     # doc mapInPandas (graph.doc_kg_pairs) — the rejoin key
-    # (url, pivot_mid, pred) never leaves a document, so the staged path's
-    # subrel materialization (localCheckpoint write + two re-reads) and
+    # (url, pivot_mid, pred) never leaves a document, so the subrel
+    # materialization (localCheckpoint write + two re-reads) and
     # corpus-wide self-join are pure overhead when only `triples` is
     # consumed; the support aggregation becomes the pipeline's ONLY
     # corpus-level exchange (measured 13.2x JVM bytes/doc, 2.35x wall —
-    # BENCH/BASELINE.md round 6). Trade-off: the triples frame no longer
-    # derives from the combined stream, so a caller that ALSO materializes
-    # mentions/evidence (the staged checkpoint lane, the streaming job
-    # with its surfaces sidecar) or canonicalizes (the canon map reads
-    # corpus mention surfaces) pays a second detection pass — the
-    # streaming job keeps this False; the checkpointed runner supports
-    # both lanes (r6 cont.). Both rule-table schemas dispatch inside doc_kg_pairs
-    # (binary subrel pairs AND the generalized (slot, pred, pred_out)
-    # any-arity tables), mirroring _rejoin.
+    # BENCH/BASELINE.md round 6). Trade-off: this lane never surfaces the
+    # sentences/evidence/subrels frames (None in the result), and
+    # canonicalizing pays a second detection pass (detect_mentions) for
+    # the canon map's corpus mention surfaces. Both rule-table schemas
+    # dispatch inside doc_kg_pairs (binary subrel pairs AND the generalized
+    # (slot, pred, pred_out) any-arity tables), mirroring _rejoin.
     fused_rejoin: bool = False
     # latest-per-url dedup mode — the pipeline's ONLY corpus-wide
     # full-text shuffle:
     #   'latest' (default): always dedup (a crawl always has re-crawls);
     #   'auto':  exact narrow probe (textprep.urls_are_unique, ~50 B/row)
     #            first — a corpus that is already one-row-per-url (re-run
-    #            over a cleaned snapshot / checkpointed docs stage) skips
-    #            the text shuffle entirely, making the fused path truly
-    #            zero-shuffle from parquet to evidence;
-    #   'skip':  caller asserts one row per url (checkpointed docs stage).
-    # The one-row-per-url contract that doc_kg_combined requires holds in
-    # all three modes.
+    #            over a cleaned snapshot) skips the text shuffle entirely,
+    #            making the combined pass truly zero-shuffle from parquet
+    #            to evidence;
+    #   'skip':  caller asserts one row per url.
+    # The one-row-per-url contract that doc_kg_combined/doc_kg_pairs
+    # require holds in all three modes.
     dedup_mode: str = "latest"
     # partitioning floor for Python-heavy stages (None -> 2x cores); see
     # operators/graph.py on why AQE byte-coalescing must not size these
@@ -112,18 +110,163 @@ class PipelineConfig:
 @dataclass
 class PipelineResult:
     docs: DataFrame
-    # None in the fused-rejoin CHECKPOINTED lane, whose single UDF never
-    # surfaces the intermediate frames (mentions stays populated whenever
-    # canonicalize is on; run_pipeline itself always recovers all four
-    # from the combined stream)
+    # views of the combined stage in the default lane; in the fused_rejoin
+    # lane sentences/evidence/subrels are None (the pairs UDF never
+    # surfaces them) and mentions is set only when canonicalize is on
     mentions: DataFrame | None
     sentences: DataFrame | None
     evidence: DataFrame | None
     subrels: DataFrame | None
     canon_map: DataFrame | None
     triples: DataFrame
-    stages: dict[str, DataFrame] = field(default_factory=dict)
     metrics: dict | None = None  # extraction accumulators (read after action)
+
+
+@dataclass(frozen=True)
+class Stage:
+    """One node of the stage graph. `build` maps the frames built so far
+    (stage and view names) to this stage's frame; `parents` name the
+    stages and aux inputs ('config', 'gazetteer', 'rules') whose
+    fingerprints chain into this stage's checkpoint fingerprint; `views`
+    derives filter+project frames from the stage's output; `persist`
+    marks the multi-consumer frames the plain runner caches (the
+    checkpointed runner re-reads its parquet instead)."""
+
+    name: str
+    build: Callable[[dict], DataFrame]
+    parents: tuple[str, ...]
+    persist: bool = False
+    views: Callable[[DataFrame], dict] | None = None
+
+
+def _combined_views(combined: DataFrame) -> dict[str, DataFrame]:
+    ev = graph.evidence_from_combined(combined)
+    return {
+        "mentions": graph.mentions_from_combined(combined),
+        "sentences": graph.sentences_from_combined(combined),
+        "evidence": ev,
+        "subrels": T.subrels_from_evidence(ev),
+    }
+
+
+def _stages(
+    pages: DataFrame,
+    gazetteer: DataFrame,
+    pred_rules: DataFrame,
+    config: PipelineConfig,
+    metrics: dict | None = None,
+) -> list[Stage]:
+    """The KG stage list for `config`, in build order (module docstring)."""
+    width = config.python_parallelism or (
+        pages.sparkSession.sparkContext.defaultParallelism * 2
+    )
+    doc_args = (gazetteer, list(config.pred_vocab), config.pivot_type,
+                list(config.arg_slots))
+    graph_kw = dict(
+        max_path_len=config.max_path_len,
+        co_mention_edges=config.co_mention_edges,
+        token_window=config.token_window,
+    )
+
+    def docs(_):
+        # Extract FIRST (map-only, html never shuffles), THEN dedup latest
+        # per url on text rows — at web scale html is 5-20x the text, so
+        # this keeps the wide shuffle small at the cost of extracting the
+        # few % duplicate crawls (accumulator caveat: task retries can
+        # overcount; the checkpointed runner's manifest rows are exact).
+        pre = textprep.filter_pages(pages, config.lang)
+        resolved = textprep.resolve_text(pre, metrics=metrics)
+        if config.dedup_mode == "skip" or (
+            config.dedup_mode == "auto"
+            and textprep.urls_are_unique(pre.select("url"))
+        ):
+            # the dedup's repartition doubled as the Python-stage width
+            # pin; without it, only top up when the source is
+            # under-partitioned (pre-partitioned sources keep the true
+            # zero-shuffle path)
+            if resolved.rdd.getNumPartitions() < width:
+                return resolved.repartition(width)
+            return resolved
+        return textprep.dedup_latest_text(resolved, num_partitions=width)
+
+    canon_parents: tuple[str, ...] = ("canon",) if config.canonicalize else ()
+    if config.fused_rejoin:
+        # triples-only fast lane (see PipelineConfig.fused_rejoin): ONE doc
+        # mapInPandas emits per-doc-distinct pairs; the support agg is the
+        # only corpus exchange
+        lane = [
+            Stage("pairs", lambda f: graph.doc_kg_pairs(
+                f["docs"], *doc_args, pred_rules, **graph_kw,
+            ), ("docs", "gazetteer", "rules")),
+        ]
+        if config.canonicalize:
+            lane.append(Stage(
+                "mentions", lambda f: M.detect_mentions(f["docs"], gazetteer),
+                ("docs", "gazetteer"),
+            ))
+        mentions_from = "mentions"
+        triples = Stage("triples", lambda f: T.pairs_to_triples(
+            f["pairs"], f.get("canon"),
+        ), ("pairs", *canon_parents))
+    else:
+        # ONE Python crossing and ZERO shuffles from docs to evidence;
+        # persisted in the plain runner because the views, ER and the
+        # rejoin all read it
+        lane = [
+            Stage("combined", lambda f: graph.doc_kg_combined(
+                f["docs"], *doc_args, **graph_kw,
+            ), ("docs", "gazetteer"), persist=True, views=_combined_views),
+        ]
+        mentions_from = "combined"
+        triples = Stage("triples", lambda f: _rejoin(
+            f["subrels"], pred_rules, f.get("canon"), config,
+        ), ("combined", *canon_parents, "rules"))
+    if config.canonicalize:
+        lane.append(Stage("canon", lambda f: er.canonical_map(
+            f["mentions"].select("surface_norm")
+        ), (mentions_from,)))
+    return [Stage("docs", docs, ("config",), persist=True), *lane, triples]
+
+
+def _add(frames: dict, stage: Stage, df: DataFrame) -> None:
+    frames[stage.name] = df
+    if stage.views is not None:
+        frames.update(stage.views(df))
+
+
+def _result(frames: dict, metrics: dict | None) -> PipelineResult:
+    return PipelineResult(
+        docs=frames["docs"],
+        mentions=frames.get("mentions"),
+        sentences=frames.get("sentences"),
+        evidence=frames.get("evidence"),
+        subrels=frames.get("subrels"),
+        canon_map=frames.get("canon"),
+        triples=frames["triples"],
+        metrics=metrics,
+    )
+
+
+def _metrics(pages: DataFrame, config: PipelineConfig) -> dict | None:
+    if not config.collect_metrics:
+        return None
+    return textprep.make_extract_metrics(pages.sparkSession)
+
+
+def run_pipeline(
+    pages: DataFrame,
+    gazetteer: DataFrame,
+    pred_rules: DataFrame,
+    config: PipelineConfig = PipelineConfig(),
+) -> PipelineResult:
+    """Build every stage of _stages in order; docs and combined
+    are persisted (each feeds several consumers)."""
+    metrics = _metrics(pages, config)
+    frames: dict[str, DataFrame] = {}
+    for stage in _stages(pages, gazetteer, pred_rules, config, metrics):
+        df = stage.build(frames)
+        _add(frames, stage, df.persist() if stage.persist else df)
+    return _result(frames, metrics)
 
 
 def run_pipeline_checkpointed(
@@ -136,211 +279,35 @@ def run_pipeline_checkpointed(
     gaz_fp: str | None = None,
     rules_fp: str | None = None,
 ) -> tuple[PipelineResult, "object"]:
-    """run_pipeline with per-stage checkpoint/manifest (kill-resume).
+    """run_pipeline with per-stage checkpoint/manifest (kill-resume): the
+    same stage list, each build wrapped in StageCheckpointer.run_stage.
 
-    Stage DAG and fingerprints chain so a rerun after ANY kill point skips
-    every committed stage and recomputes only the tail. Returns (result,
-    checkpointer) — checkpointer.stats records skipped/built per stage.
+    Fingerprints chain along each stage's parents, so a rerun after ANY
+    kill point skips every committed stage and recomputes only the tail.
+    Returns (result, checkpointer) — checkpointer.stats records
+    skipped/built per stage.
 
     The gazetteer and rule-table CONTENT chain into the fingerprints of
-    the stages that consume them (mentions/pairs and triples), so a rerun
-    against the same checkpoint root with an edited dim recomputes exactly
-    the affected suffix instead of replaying stale results (pre-v3 bug:
-    only the pages path + config were fingerprinted). Both dims are
-    broadcast-class by design; pass a precomputed gaz_fp/rules_fp version
-    tag to skip the content scan for unusually large sides.
-
-    config.fused_rejoin takes the production fast lane through stage
-    "pairs" (graph.doc_kg_pairs, ONE Python crossing docs->url-level
-    pairs) + "triples" (pairs_to_triples support agg) — the same lane
-    bench/scaling measure, now with per-stage kill-resume. Equivalence to
-    the staged lane is pinned (tests/test_catalog_checkpoint.py). In that
-    lane sentences/evidence/subrels are not materialized (the fused UDF
-    never surfaces them); mentions/canon are built only when
-    config.canonicalize.
-    """
+    the stages that consume them, so a rerun against the same checkpoint
+    root with an edited dim recomputes exactly the affected suffix instead
+    of replaying stale results. Both dims are broadcast-class by design;
+    pass a precomputed gaz_fp/rules_fp version tag to skip the content
+    scan for unusually large sides."""
     from .checkpoint import StageCheckpointer, content_fingerprint, fingerprint
 
-    spark = pages.sparkSession
-    ck = StageCheckpointer(spark, ckpt_root)
-    cfg_fp = fingerprint(corpus_fp, repr(config))
-    gaz_fp = gaz_fp or content_fingerprint(gazetteer)
-    rules_fp = rules_fp or content_fingerprint(pred_rules)
-
-    width = config.python_parallelism or (
-        spark.sparkContext.defaultParallelism * 2
-    )
-    docs, fp_docs = ck.run_stage(
-        "docs", cfg_fp,
-        lambda: textprep.dedup_latest_text(
-            textprep.resolve_text(textprep.filter_pages(pages, config.lang)),
-            num_partitions=width,
-        ),
-    )
-
-    def mentions_stage():
-        return ck.run_stage(
-            "mentions", fingerprint(fp_docs, gaz_fp),
-            lambda: M.detect_mentions(docs, gazetteer),
+    ck = StageCheckpointer(pages.sparkSession, ckpt_root)
+    fps = {
+        "config": fingerprint(corpus_fp, repr(config)),
+        "gazetteer": gaz_fp or content_fingerprint(gazetteer),
+        "rules": rules_fp or content_fingerprint(pred_rules),
+    }
+    metrics = _metrics(pages, config)
+    frames: dict[str, DataFrame] = {}
+    for stage in _stages(pages, gazetteer, pred_rules, config, metrics):
+        df, fps[stage.name] = ck.run_stage(
+            stage.name,
+            fingerprint(*(fps[p] for p in stage.parents)),
+            partial(stage.build, frames),
         )
-
-    if config.fused_rejoin:
-        pairs, fp_p = ck.run_stage(
-            "pairs", fingerprint(fp_docs, gaz_fp, rules_fp),
-            lambda: graph.doc_kg_pairs(
-                docs, gazetteer, list(config.pred_vocab),
-                config.pivot_type, list(config.arg_slots), pred_rules,
-                config.max_path_len,
-                co_mention_edges=config.co_mention_edges,
-                token_window=config.token_window,
-            ),
-        )
-        if config.canonicalize:
-            ments, fp_m = mentions_stage()
-            canon, fp_c = ck.run_stage(
-                "canon", fp_m,
-                lambda: er.canonical_map(ments.select("surface_norm")),
-            )
-        else:
-            ments, canon, fp_c = None, None, "nocanon"
-        trips, _ = ck.run_stage(
-            "triples", fingerprint(fp_p, fp_c),
-            lambda: T.pairs_to_triples(pairs, canon),
-        )
-        result = PipelineResult(
-            docs=docs, mentions=ments, sentences=None, evidence=None,
-            subrels=None, canon_map=canon, triples=trips,
-            stages={"pairs": pairs},
-        )
-        return result, ck
-
-    ments, fp_m = mentions_stage()
-    sents, fp_s = ck.run_stage(
-        "sentences", fp_docs,
-        lambda: M.analyze_sentences(docs, list(config.pred_vocab)),
-    )
-    ev, fp_e = ck.run_stage(
-        "evidence", fingerprint(fp_m, fp_s),
-        lambda: graph.doc_graph_subrels(
-            ments, sents, config.pivot_type, list(config.arg_slots),
-            config.max_path_len, num_partitions=width,
-            co_mention_edges=config.co_mention_edges,
-            token_window=config.token_window,
-        ),
-    )
-    subrels, fp_sr = ck.run_stage(
-        "subrels", fp_e, lambda: T.subrels_from_evidence(ev)
-    )
-    if config.canonicalize:
-        canon, fp_c = ck.run_stage(
-            "canon", fp_m, lambda: er.canonical_map(ments.select("surface_norm"))
-        )
-    else:
-        canon, fp_c = None, "nocanon"
-    trips, _ = ck.run_stage(
-        "triples", fingerprint(fp_sr, fp_c, rules_fp),
-        lambda: _rejoin(subrels, pred_rules, canon, config),
-    )
-    result = PipelineResult(
-        docs=docs, mentions=ments, sentences=sents, evidence=ev,
-        subrels=subrels, canon_map=canon, triples=trips,
-    )
-    return result, ck
-
-
-def run_pipeline(
-    pages: DataFrame,
-    gazetteer: DataFrame,
-    pred_rules: DataFrame,
-    config: PipelineConfig = PipelineConfig(),
-) -> PipelineResult:
-    width = config.python_parallelism or (
-        pages.sparkSession.sparkContext.defaultParallelism * 2
-    )
-    metrics = (
-        textprep.make_extract_metrics(pages.sparkSession)
-        if config.collect_metrics else None
-    )
-    # Extract FIRST (map-only, html never shuffles), THEN dedup latest per
-    # url on text rows — at web scale html is 5-20x the text, so this keeps
-    # the wide shuffle small at the cost of extracting the few % duplicate
-    # crawls. persist: docs feeds both mention detection and sentence
-    # analysis (accumulator caveat: task retries can overcount; the
-    # checkpointed variant's manifest rows are exact).
-    # pages_from-style sources are pre-partitioned; filter+resolve are
-    # map-only, so when dedup is skippable the docs frame reaches the fused
-    # pass WITHOUT any shuffle at all
-    pre = textprep.filter_pages(pages, config.lang)
-    resolved = textprep.resolve_text(pre, metrics=metrics)
-    if config.dedup_mode == "skip" or (
-        config.dedup_mode == "auto" and textprep.urls_are_unique(
-            pre.select("url")
-        )
-    ):
-        docs = resolved
-        # the dedup's repartition doubled as the Python-stage width pin;
-        # without it, only top up when the source is under-partitioned
-        # (pre-partitioned sources keep the true zero-shuffle path)
-        if docs.rdd.getNumPartitions() < width:
-            docs = docs.repartition(width)
-        docs = docs.persist()
-    else:
-        docs = textprep.dedup_latest_text(resolved, num_partitions=width).persist()
-
-    if config.fused:
-        # ONE Python crossing and ZERO shuffles from docs to evidence:
-        # dedup_latest_text leaves exactly one row per url, so detection +
-        # sentence analysis + per-doc graph BFS all run inside a single
-        # mapInPandas (graph.doc_kg_combined); mentions/sentences/evidence
-        # and the ER surface recover by filter+project. persist: the
-        # combined stream is referenced by all of them.
-        combined = graph.doc_kg_combined(
-            docs, gazetteer, list(config.pred_vocab),
-            config.pivot_type, list(config.arg_slots),
-            config.max_path_len,
-            co_mention_edges=config.co_mention_edges,
-            token_window=config.token_window,
-        ).persist()
-        ments = graph.mentions_from_combined(combined)
-        sents = graph.sentences_from_combined(combined)
-        ev = graph.evidence_from_combined(combined)
-    else:
-        ments = M.detect_mentions(docs, gazetteer)
-        sents = M.analyze_sentences(docs, list(config.pred_vocab))
-        ev = graph.doc_graph_subrels(
-            ments, sents, config.pivot_type, list(config.arg_slots),
-            config.max_path_len, num_partitions=width,
-            co_mention_edges=config.co_mention_edges,
-            token_window=config.token_window,
-        )
-    subrels = T.subrels_from_evidence(ev)
-
-    canon = er.canonical_map(ments.select("surface_norm")) if config.canonicalize else None
-    if config.fused and config.fused_rejoin:
-        # triples-only fast lane (see fused_rejoin docstring): ONE doc
-        # mapInPandas emits per-doc-distinct pairs; the support agg is the
-        # only corpus exchange. Equivalence to the staged chain is pinned
-        # (test_pairs_fusion_equals_staged, test_fused_pipeline_equals_unfused).
-        trips = T.pairs_to_triples(
-            graph.doc_kg_pairs(
-                docs, gazetteer, list(config.pred_vocab),
-                config.pivot_type, list(config.arg_slots), pred_rules,
-                config.max_path_len,
-                co_mention_edges=config.co_mention_edges,
-                token_window=config.token_window,
-            ),
-            canon,
-        )
-    else:
-        trips = _rejoin(subrels, pred_rules, canon, config)
-
-    return PipelineResult(
-        docs=docs,
-        mentions=ments,
-        sentences=sents,
-        evidence=ev,
-        subrels=subrels,
-        canon_map=canon,
-        triples=trips,
-        metrics=metrics,
-    )
+        _add(frames, stage, df)
+    return _result(frames, metrics), ck

@@ -13,7 +13,7 @@ import pyspark.sql.functions as F
 
 from ..operators.connected_components import connected_components
 from ..operators.er import canonical_map
-from ..operators.graph import doc_graph_evidence
+from ..operators.graph import doc_graph_subrels
 from ..operators.mentions import analyze_sentences, detect_mentions
 from ..operators.textprep import resolve_text
 from ..operators.triples import binary_subrels
@@ -124,7 +124,7 @@ def doc_graph_bfs_q(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     m = detect_mentions(docs, _gaz_df(spark))
     s = analyze_sentences(docs, PRED_WORDS)
-    ev = doc_graph_evidence(m, s, "PIV", [("ARGA", "a"), ("ARGB", "b")])
+    ev = doc_graph_subrels(m, s, "PIV", [("ARGA", "a"), ("ARGB", "b")])
     return ev.select(
         "url",
         F.col("pivot_mid").cast("bigint").alias("pivot_mid"),
@@ -150,7 +150,9 @@ def decompose_nary_q(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     m = detect_mentions(docs, _gaz_df(spark))
     s = analyze_sentences(docs, PRED_WORDS)
-    ev = doc_graph_evidence(m, s, "PIV", [("ARGA", "a"), ("ARGB", "b")])
+    ev = doc_graph_subrels(
+        m, s, "PIV", [("ARGA", "a"), ("ARGB", "b")]
+    ).select("url", "pivot_mid", "other_mid", "slot", "path_len", "path")
     sr = binary_subrels(ev, m, s)
     return sr.select(
         "url",

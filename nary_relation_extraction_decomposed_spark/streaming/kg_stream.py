@@ -78,6 +78,11 @@ def stream_pages_to_triples(
             "apply one shared canonical map at merge time "
             "(canonicalize_url_deltas)"
         )
+    if url_level and config.fused_rejoin:
+        raise ValueError(
+            "url_level deltas read the subrels and mentions frames, which "
+            "the fused_rejoin lane does not surface; use fused_rejoin=False"
+        )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.head(1):

@@ -166,11 +166,11 @@ def test_sigkill_mid_stage_resume_byte_identical(spark, tmp_path, fixture_dir):
             text=True, env=env,
         )
 
-    # run 1: the process parks after the mentions manifest commits (docs
+    # run 1: the process parks after the combined manifest commits (docs
     # committed before it); SIGKILL it there — guaranteed mid-stage
-    proc = launch(out1, pause_after="mentions")
+    proc = launch(out1, pause_after="combined")
     kill_after = [os.path.join(ck, s, "manifest.json")
-                  for s in ("docs", "mentions")]
+                  for s in ("docs", "combined")]
     deadline = time.time() + 300
     try:
         while time.time() < deadline:
@@ -197,7 +197,7 @@ def test_sigkill_mid_stage_resume_byte_identical(spark, tmp_path, fixture_dir):
     assert proc2.returncode == 0, stdout[-2000:]
     stats = json.loads(stdout.strip().splitlines()[-1])
     assert stats["stages"]["docs"]["skipped"] is True
-    assert stats["stages"]["mentions"]["skipped"] is True
+    assert stats["stages"]["combined"]["skipped"] is True
     assert stats["n_triples"] > 0
 
     # uninterrupted reference run, same config, in-session

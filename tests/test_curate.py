@@ -54,6 +54,26 @@ def test_funnel_semantics(corpus):
     assert _ids(stages["sampled"]) == [1, 6, 7]
 
 
+def test_null_text_never_survives(spark, corpus):
+    """Exact dedup inner-joins on md5(text), and md5(NULL) never joins — so
+    a null-text doc escaping the quality gate would also escape the
+    min-id-per-content rule (two null-text docs would both survive). The
+    gate must drop them at any min_quality, although quality_score_col
+    scores NULL text 0.9."""
+    nulls = spark.createDataFrame(
+        [(8, None, "en"), (9, None, "en"), (10, None, "de")], corpus.schema
+    )
+    stages = curate_corpus(corpus.unionByName(nulls), min_quality=0.0)
+    for name, df in stages.items():
+        ids = _ids(df)
+        assert not {8, 9, 10} & set(ids), (name, ids)
+        assert df.filter(F.col("text").isNull()).count() == 0, name
+    assert _ids(stages["quality"]) == [1, 2, 3, 4, 5, 6, 7]
+    # the zero-token junk doc passes a 0.0 gate; with fewer tokens than
+    # the shingle size it has no shingles, so it is nobody's near-dup
+    assert _ids(stages["sampled"]) == [1, 5, 6, 7]
+
+
 def test_neardup_verification_threshold(corpus):
     # a threshold above 1.0 can never be met, so every LSH candidate pair
     # is rejected at verification and the near-dup stage drops nothing

@@ -486,9 +486,10 @@ def test_er_minhash_distinct_shapes_identical(spark, monkeypatch):
 def test_widen_if_narrow_probe_vs_exchange_dispatch(spark):
     """_widen_if_narrow must (a) widen a narrow exchange-free input via the
     partition-count probe, (b) leave an already-wide exchange-free input
-    untouched, and (c) repartition an exchange-bearing chain WITHOUT
-    probing getNumPartitions (under AQE the probe would materialize every
-    upstream stage; review r6 cont.). Values are never changed."""
+    untouched, (c) repartition an exchange-bearing chain WITHOUT probing
+    getNumPartitions (under AQE the probe would materialize every
+    upstream stage), and (d, e) trust only a topmost REPARTITION_BY_NUM
+    exchange on the key. Values are never changed."""
     nparts = spark.sparkContext.defaultParallelism
     em = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id")
 
@@ -514,6 +515,23 @@ def test_widen_if_narrow_probe_vs_exchange_dispatch(spark):
     assert sorted(r["vec_id"] for r in out.collect()) == sorted(
         r["vec_id"] for r in shuffled.collect()
     )
+
+    # (d) a keyed repartition WITHOUT a count (REPARTITION_BY_COL) is not
+    # a width guarantee — AQE may coalesce it — and (e) an orderBy above a
+    # wide repartition(n, key) is range-partitioned on top: the topmost
+    # exchange decides, so both come back with a keyed REPARTITION_BY_NUM
+    want = sorted(r["vec_id"] for r in em.collect())
+    for df in (
+        em.repartition(F.col("vec_id")),
+        em.repartition(nparts, "vec_id").orderBy("vec_id"),
+    ):
+        out = S._widen_if_narrow(df, "vec_id")
+        assert out is not df
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        top = next(line for line in plan.splitlines() if "Exchange" in line)
+        assert "hashpartitioning(vec_id" in top, plan
+        assert f", {nparts}), REPARTITION_BY_NUM" in top, plan
+        assert sorted(r["vec_id"] for r in out.collect()) == want
 
 
 def test_hyperplane_buckets_input_partitioning_invariant(spark):

@@ -108,53 +108,6 @@ def _hrows(df):
     )
 
 
-def test_fused_tagged_path_equals_unfused(spark, fixture_dir):
-    """detect_and_analyze_tagged -> doc_graph_subrels_tagged (ONE docs pass,
-    one shuffle) must emit exactly the same evidence rows as the unfused
-    detect_mentions + analyze_sentences -> doc_graph_subrels path, and the
-    mentions/sentences views must equal the unfused frames."""
-    from nary_relation_extraction_decomposed_spark.operators.graph import (
-        doc_graph_subrels,
-        doc_graph_subrels_tagged,
-    )
-    from nary_relation_extraction_decomposed_spark.operators.mentions import (
-        analyze_sentences,
-        detect_and_analyze_tagged,
-        detect_mentions,
-        mentions_view,
-        sentences_view,
-    )
-    from nary_relation_extraction_decomposed_spark.operators.textprep import (
-        dedup_latest_text,
-        filter_pages,
-        resolve_text,
-    )
-
-    pages = spark.read.parquet(os.path.join(fixture_dir, "pages.parquet"))
-    pages = pages.filter(F.xxhash64("url") % 8 == 0)
-    gaz = spark.read.parquet(os.path.join(fixture_dir, "gazetteer.parquet"))
-    docs = dedup_latest_text(resolve_text(filter_pages(pages, "en")))
-    slots = [("GENE", "a"), ("VARIANT", "b")]
-    vocab = ["inhibits", "activates", "binds", "modulates"]
-
-    ments = detect_mentions(docs, gaz)
-    sents = analyze_sentences(docs, vocab)
-    tagged = detect_and_analyze_tagged(docs, gaz, vocab)
-
-    unfused = doc_graph_subrels(ments, sents, "DRUG", slots)
-    fused = doc_graph_subrels_tagged(tagged, "DRUG", slots)
-    cols = ["url", "pivot_mid", "pivot_norm", "pivot_sent", "other_mid",
-            "other_norm", "slot", "pred", "path_len"]
-    a = {tuple(r) for r in unfused.select(*cols).collect()}
-    b = {tuple(r) for r in fused.select(*cols).collect()}
-    assert a == b and len(a) > 100
-
-    mv = {tuple(r) for r in mentions_view(tagged).collect()}
-    assert mv == {tuple(r) for r in ments.collect()} and mv
-    sv = _hrows(sentences_view(tagged))
-    assert sv == _hrows(sents) and sv
-
-
 def test_combined_pass_equals_staged_operators(spark, fixture_dir):
     """doc_kg_combined (ONE mapInPandas, ZERO shuffles docs->evidence —
     valid because dedup leaves one row per url) must reproduce the staged
@@ -259,27 +212,55 @@ def test_pairs_fusion_equals_staged(spark, fixture_dir):
 
 
 def test_fused_pipeline_equals_unfused(spark, fixture_dir):
-    """run_pipeline's fused default == the unfused pipeline end to end
-    (triples with support)."""
+    """run_pipeline's combined default == the staged operator chain
+    (detect_mentions -> analyze_sentences -> doc_graph_subrels ->
+    subrels_from_evidence -> _rejoin) end to end (triples with support)."""
+    from nary_relation_extraction_decomposed_spark.operators.graph import (
+        doc_graph_subrels,
+    )
+    from nary_relation_extraction_decomposed_spark.operators.mentions import (
+        analyze_sentences,
+        detect_mentions,
+    )
+    from nary_relation_extraction_decomposed_spark.operators.textprep import (
+        dedup_latest_text,
+        filter_pages,
+        resolve_text,
+    )
+    from nary_relation_extraction_decomposed_spark.operators.triples import (
+        subrels_from_evidence,
+    )
+    from nary_relation_extraction_decomposed_spark.plans.pipeline import _rejoin
+
     pages = spark.read.parquet(os.path.join(fixture_dir, "pages.parquet"))
     pages = pages.filter(F.xxhash64("url") % 8 == 0)
     gaz = spark.read.parquet(os.path.join(fixture_dir, "gazetteer.parquet"))
     rules = spark.read.parquet(os.path.join(fixture_dir, "pred_rules.parquet"))
 
-    def triples(**cfg_kw):
-        cfg_kw.setdefault("canonicalize", False)
-        cfg = PipelineConfig(**cfg_kw)
-        df = run_pipeline(pages, gaz, rules, cfg).triples
+    def rows(df):
         return {tuple(r) for r in df.select("subj", "pred", "obj", "support").collect()}
 
-    want = triples(fused=True)
-    assert want == triples(fused=False)
+    def triples(**cfg_kw):
+        cfg_kw.setdefault("canonicalize", False)
+        return rows(run_pipeline(pages, gaz, rules, PipelineConfig(**cfg_kw)).triples)
+
+    cfg = PipelineConfig(canonicalize=False)
+    docs = dedup_latest_text(resolve_text(filter_pages(pages, cfg.lang)))
+    ev = doc_graph_subrels(
+        detect_mentions(docs, gaz),
+        analyze_sentences(docs, list(cfg.pred_vocab)),
+        cfg.pivot_type, list(cfg.arg_slots),
+    )
+    staged = rows(_rejoin(subrels_from_evidence(ev), rules, None, cfg))
+
+    want = triples()
+    assert want == staged and want
     # round 6: the production fused_rejoin lane (doc_kg_pairs inside
     # run_pipeline — the configuration the bench headline measures) must
     # produce the identical triples, with and without merge-time ER
-    assert want == triples(fused=True, fused_rejoin=True)
-    assert triples(fused=True, canonicalize=True) == triples(
-        fused=True, fused_rejoin=True, canonicalize=True
+    assert want == triples(fused_rejoin=True)
+    assert triples(canonicalize=True) == triples(
+        fused_rejoin=True, canonicalize=True
     )
 
 

@@ -56,13 +56,12 @@ def test_kill_resume(spark, inputs, tmp_path):
     t1 = _triples_set(r1.triples)
     assert all(not st["skipped"] for st in ck1.stats.values())
 
-    # simulate a kill AFTER subrels but BEFORE triples committed
+    # simulate a kill AFTER combined but BEFORE triples committed
     shutil.rmtree(os.path.join(root, "triples"))
 
     r2, ck2 = run_pipeline_checkpointed(pages, gaz, rules, cfg, root, "corpus-v1")
     assert ck2.stats["docs"]["skipped"]
-    assert ck2.stats["mentions"]["skipped"]
-    assert ck2.stats["evidence"]["skipped"]
+    assert ck2.stats["combined"]["skipped"]
     assert not ck2.stats["triples"]["skipped"]
     assert _triples_set(r2.triples) == t1
 
@@ -86,7 +85,7 @@ def test_aux_input_change_invalidates_suffix(spark, inputs, tmp_path):
     the stages that consume them. Editing the rule table and rerunning
     against the same checkpoint root must rebuild EXACTLY the triples
     stage (not replay stale triples — the pre-v3 bug); editing the
-    gazetteer must rebuild the mentions suffix but still skip docs."""
+    gazetteer must rebuild the combined suffix but still skip docs."""
     pages, gaz, rules = inputs
     pages = pages.filter(F.xxhash64("url") % 8 == 0)
     root = str(tmp_path / "ckpt")
@@ -101,27 +100,25 @@ def test_aux_input_change_invalidates_suffix(spark, inputs, tmp_path):
     )
     r2, ck2 = run_pipeline_checkpointed(pages, gaz, rules2, cfg, root, "c1")
     assert ck2.stats["docs"]["skipped"]
-    assert ck2.stats["mentions"]["skipped"]
-    assert ck2.stats["subrels"]["skipped"]
+    assert ck2.stats["combined"]["skipped"]
     assert not ck2.stats["triples"]["skipped"]
     t2 = _triples_set(r2.triples)
     assert t2 != t1
     assert not any(p.endswith("_v2") for _, p, _, _ in t1)
     assert any(p.endswith("_v2") for _, p, _, _ in t2)
 
-    # gazetteer edit -> mentions suffix rebuilds, docs still skips
+    # gazetteer edit -> combined suffix rebuilds, docs still skips
     gaz2 = gaz.limit(max(gaz.count() - 5, 1))
     _, ck3 = run_pipeline_checkpointed(pages, gaz2, rules2, cfg, root, "c1")
     assert ck3.stats["docs"]["skipped"]
-    assert not ck3.stats["mentions"]["skipped"]
-    assert not ck3.stats["evidence"]["skipped"]
+    assert not ck3.stats["combined"]["skipped"]
     assert not ck3.stats["triples"]["skipped"]
 
 
 def test_fused_rejoin_checkpoint_resume(spark, inputs, tmp_path):
-    """The production fused lane (docs -> pairs -> mentions/canon ->
+    """The fused_rejoin lane (docs -> pairs -> mentions -> canon ->
     triples) is checkpoint-resumable and triple-identical to both the
-    staged checkpointed lane and the non-checkpointed fused pipeline."""
+    default checkpointed lane and the non-checkpointed fused pipeline."""
     import dataclasses
 
     pages, gaz, rules = inputs

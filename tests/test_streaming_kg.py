@@ -19,13 +19,21 @@ from nary_relation_extraction_decomposed_spark.streaming import kg_stream as KS
 def test_streaming_rejects_per_batch_canonicalize(spark, fixture_dir, tmp_path):
     """Per-micro-batch canonical maps break delta additivity (labels are the
     min of that BATCH's cluster, not the union's) — the entry point must
-    refuse rather than silently emit non-additive deltas."""
+    refuse rather than silently emit non-additive deltas. Likewise
+    url_level deltas need the subrels/mentions frames, which the
+    fused_rejoin lane never builds."""
     import pytest
 
     with pytest.raises(ValueError, match="canonicalize"):
         KS.stream_pages_to_triples(
             None, None, None, PipelineConfig(canonicalize=True),
             str(tmp_path / "o"), str(tmp_path / "c"),
+        )
+    with pytest.raises(ValueError, match="fused_rejoin"):
+        KS.stream_pages_to_triples(
+            None, None, None,
+            PipelineConfig(canonicalize=False, fused_rejoin=True),
+            str(tmp_path / "o"), str(tmp_path / "c"), url_level=True,
         )
 
 

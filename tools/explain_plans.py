@@ -147,10 +147,11 @@ def ivf_pruning_evidence(spark) -> str:
 def pipeline_plan_evidence(spark) -> str:
     """The END-TO-END kg pipeline physical plan over the committed fixture
     corpus (canonicalize off so the CC iteration driver-loop doesn't hide
-    the core shape). What to verify: ONE url repartition feeds the tagged-
-    union Python stage; the rejoin is an equi-join over the checkpointed
-    subrels (no recompute of the Python chain); rules broadcast; the final
-    support count is the distinct+count two-phase shape."""
+    the core shape). What to verify: ONE url shuffle (the dedup) feeds
+    the combined Python stage, which adds none; the rejoin is an equi-join
+    over the checkpointed subrels (no recompute of the Python chain);
+    rules broadcast; the final support count is the distinct+count
+    two-phase shape."""
     import io
     import os
     from contextlib import redirect_stdout
@@ -173,8 +174,9 @@ def pipeline_plan_evidence(spark) -> str:
         res.triples.explain("formatted")
     return (
         "\n## Full kg pipeline (triples) — end-to-end physical plan\n\n"
-        "*filter->extract(mapInPandas)->dedup(window on ONE url shuffle)->"
-        "tagged-union graph stage(mapInPandas)->rejoin(SMJ on checkpointed "
+        "*filter->extract(mapInPandas)->dedup(max(struct) aggregate on ONE "
+        "url shuffle)->combined doc pass(ONE mapInPandas: detection + "
+        "sentences + graph BFS, no shuffle)->rejoin(SMJ on checkpointed "
         "subrels)->broadcast rules->distinct+count support.*\n\n"
         f"```\n{buf.getvalue().strip()}\n```\n"
     )
