@@ -55,7 +55,9 @@ def bpe_ish_count_col(c: Column) -> Column:
 
 def quality_score_col(c: Column) -> Column:
     """Length/punct/stopword composite in [0,1]; integer-count arithmetic so
-    the DuckDB twin is bit-identical."""
+    the DuckDB twin is bit-identical. NULL text scores NULL: the counts are
+    NULL there, and least(NULL, 1.0) would otherwise read 1.0 (in Spark
+    and DuckDB alike) and rate missing text 0.9."""
     low = F.lower(c)
     toks = _match_count(low, TOKEN_RE)
     punct = _match_count(low, PUNCT_RE)
@@ -67,7 +69,8 @@ def quality_score_col(c: Column) -> Column:
     punct_penalty = F.least(
         punct.cast("double") / F.greatest(toks, F.lit(1)).cast("double"), F.lit(1.0)
     )
-    return F.round(len_score * 0.5 + stop_score * 0.4 + (1 - punct_penalty) * 0.1, 6)
+    score = F.round(len_score * 0.5 + stop_score * 0.4 + (1 - punct_penalty) * 0.1, 6)
+    return F.when(c.isNotNull(), score)
 
 
 def fingerprint_col(c: Column) -> Column:

@@ -18,7 +18,6 @@ below is the only thing that would change.
 
 from __future__ import annotations
 
-import os
 import warnings
 
 import pyspark.sql.functions as F
@@ -179,18 +178,8 @@ def connected_components(
     # path completes the remainder instead of starting over. Skipped
     # entirely when driver_threshold <= 0 (the caller pinned a
     # distributed path; the probe would be a wasted job).
-    # NARY_CC_PREFLIGHT=legacy restores the pre-fix shape (probe on the
-    # raw frame, never skipped) for same-window A/B runs — the committed
-    # er.py NARY_ER_DISTINCT idiom
-    if os.environ.get("NARY_CC_PREFLIGHT", "") == "legacy":
-        lim = edges.select(
-            F.col(src).alias("u"), F.col(dst).alias("v")
-        ).limit(driver_threshold + 1)
-        run_probe = True
-    else:
-        lim = e.limit(driver_threshold + 1)
-        run_probe = driver_threshold > 0
-    if run_probe and lim.count() <= driver_threshold:
+    lim = e.limit(driver_threshold + 1)
+    if driver_threshold > 0 and lim.count() <= driver_threshold:
         head = lim.collect()
         parent: dict[int, int] = {}
 

@@ -5,8 +5,8 @@ deterministic stratified sampling.
 Every stage is deterministic (re-running yields the identical corpus, the
 property that makes a 100 TB curation run auditable and resumable):
 
-1. quality gate   — text IS NOT NULL and quality_score_col >= min_quality;
-                    pure scan-side filter, zero shuffle.
+1. quality gate   — quality_score_col >= min_quality (NULL, so dropped,
+                    for null text); pure scan-side filter, zero shuffle.
 2. exact dedup    — min-id survivor per md5(text) group (the same rule as
                     operators/dedup.exact_dedup), applied as an ANTI-join
                     on the DROPPED ids: the (id, md5) proxy rows decide the
@@ -82,12 +82,9 @@ def curate_corpus(
     # lineage-truncated so one action executes the regex gate and the
     # dedup chain once, not once per downstream reference (measured 2x
     # wall on the 80k-doc scaling probe before truncation)
-    # the null check is explicit: quality_score_col(NULL) is 0.9, not NULL
-    # (F.least skips the NULL token counts), so the score alone keeps
-    # null-text docs at any min_quality <= 0.9
+    # quality_score_col(NULL) is NULL, so the gate drops null-text docs
     quality = docs.filter(
-        F.col(text_col).isNotNull()
-        & (quality_score_col(F.col(text_col)) >= F.lit(min_quality))
+        quality_score_col(F.col(text_col)) >= F.lit(min_quality)
     ).localCheckpoint(eager=False)
 
     # Exact dedup on the (id, md5) PROXY rows (guide §8: decide with small

@@ -35,15 +35,23 @@ def word_ngrams_col(text: Column, n: int) -> Column:
     """Distinct sorted word n-grams — higher-order SQL, no UDF."""
     toks = F.regexp_extract_all(F.lower(text), F.lit(TOKEN_RE), F.lit(0))
     if n == 1:
-        grams = toks
-    else:
-        idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
-        # sequence(1, k) counts DOWN for k < 1 and slice(toks, 0, n)
-        # raises, so a text of fewer than n tokens has no n-gram at all
-        grams = F.when(F.size(toks) >= n, F.transform(
-            idx, lambda i: F.array_join(F.slice(toks, i, n), " ")
+        return F.array_sort(F.array_distinct(toks))
+
+    def grams(t: Column) -> Column:
+        # sequence(1, k) counts DOWN for k < 1 and slice(t, 0, n) raises,
+        # so a text of fewer than n tokens has no n-gram at all
+        idx = F.sequence(F.lit(1), F.size(t) - (n - 1))
+        return F.when(F.size(t) >= n, F.transform(
+            idx, lambda i: F.array_join(F.slice(t, i, n), " ")
         )).otherwise(F.array().cast("array<string>"))
-    return F.array_sort(F.array_distinct(grams))
+
+    # lambdas run interpreted, without subexpression elimination: a
+    # lambda that referenced `toks` itself would rerun the regex once per
+    # token. Binding it once as the variable of an outer one-element
+    # transform keeps the column linear in the token count.
+    return F.array_sort(F.array_distinct(
+        F.element_at(F.transform(F.array(toks), grams), 1)
+    ))
 
 
 def ngram_jaccard_pairs(

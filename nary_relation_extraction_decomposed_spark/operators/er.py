@@ -16,8 +16,6 @@ functions + xxhash64) — zero Python in the hot path. Determinism:
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -47,18 +45,11 @@ def minhash_signatures(surfaces: DataFrame, col: str = "surface_norm") -> DataFr
     surfaces / 32 cores). The explicit repartition is AQE-coalesce-exempt,
     and because it already clusters by `col` BOTH the dedup and the
     min-aggregate below run without any further exchange: one shuffle
-    total, fully parallel.
-
-    NARY_ER_DISTINCT=plain re-selects the pre-round-6 .distinct() shape —
-    diagnostic only, kept so tools/ab_harness.py can pin the speedup as
-    code-caused in one window (same pattern as SPARK_GRAFT_KG_FUSION)."""
-    if os.environ.get("NARY_ER_DISTINCT", "repart") == "plain":
-        distinct = surfaces.select(col).distinct()
-    else:
-        nparts = surfaces.sparkSession.sparkContext.defaultParallelism
-        distinct = (
-            surfaces.select(col).repartition(nparts, F.col(col)).dropDuplicates([col])
-        )
+    total, fully parallel."""
+    nparts = surfaces.sparkSession.sparkContext.defaultParallelism
+    distinct = (
+        surfaces.select(col).repartition(nparts, F.col(col)).dropDuplicates([col])
+    )
     grams = distinct.select(
         F.col(col), F.explode(shingles_col(F.col(col))).alias("g")
     )

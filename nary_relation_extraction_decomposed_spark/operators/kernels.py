@@ -36,8 +36,6 @@ import re
 from collections import deque
 from dataclasses import dataclass
 
-from ..functions.textnorm import normalize_surface
-
 MAX_PATH_LEN = 3          # max BFS edges for an accepted evidence path
 MAX_MENTIONS_PER_DOC = 512  # pathological docs truncated deterministically
 MAX_GAZ_TOKENS = 4        # longest gazetteer surface, in normalized tokens
@@ -360,4 +358,75 @@ def bfs_evidence(
                 }
             )
     out.sort(key=lambda r: (r["pivot_mid"], r["other_mid"]))
+    return out
+
+
+def doc_evidence(
+    n_sents: int,
+    mentions: list[dict],
+    preds_of_sent: dict,
+    sent_tok_counts: list[int | None] | None,
+    pivot_type: str,
+    arg_slots: list[tuple[str, str]],
+    max_path_len: int = MAX_PATH_LEN,
+    co_mention_edges: bool = True,
+    token_window: int | None = TOKEN_WINDOW,
+) -> list[dict]:
+    """One document's evidence rows (graph.EVIDENCE_SUBREL_SCHEMA without
+    url): bfs_evidence rows plus the pivot's and argument's surface_norm,
+    the pivot's sentence, and pred = nearest_pred of the pivot mention,
+    resolved once per pivot. preds_of_sent maps sent_id -> (preds,
+    pred_toks); a pivot whose sentence is absent gets pred None."""
+    by_mid = {m["mention_id"]: m for m in mentions}
+    pred_of_pivot: dict[int, str | None] = {}
+    rows = bfs_evidence(n_sents, mentions, pivot_type, arg_slots, max_path_len,
+                        co_mention_edges, token_window, sent_tok_counts)
+    for r in rows:
+        pv = r["pivot_mid"]
+        pm = by_mid[pv]
+        if pv not in pred_of_pivot:
+            sp = preds_of_sent.get(pm["sent_id"])
+            pred_of_pivot[pv] = nearest_pred(
+                sp[0], sp[1], pm["tok_begin"], pm["tok_end"]
+            ) if sp is not None else None
+        r["pivot_norm"] = pm["surface_norm"]
+        r["pivot_sent"] = pm["sent_id"]
+        r["other_norm"] = by_mid[r["other_mid"]]["surface_norm"]
+        r["pred"] = pred_of_pivot[pv]
+    return rows
+
+
+def doc_pairs(
+    evidence: list[dict],
+    rules: dict[tuple[str, str], list[str]],
+    slot_labels: list[str],
+) -> set[tuple[str, str, str]]:
+    """One document's rejoin: doc_evidence rows -> the distinct
+    (subj_norm, pred, obj_norm) triples, the per-doc form of
+    triples.rejoin_nary. rules maps (slot, pred) -> the output predicates
+    of its rule rows (triples.slot_rule_rows); every rule row emits.
+
+    An instance at a pivot needs an evidence row with non-null pred for
+    every slot of slot_labels and a rule for every (slot, pred); it emits
+    (pivot_norm, output predicate, other_norm) per slot filler per rule —
+    the filler cross product of the Spark rejoin, under distinct."""
+    sides: dict[str, dict[int, list[str]]] = {s: {} for s in slot_labels}
+    pivots: dict[int, tuple[str, str]] = {}
+    for r in evidence:
+        side = sides.get(r["slot"])
+        if r["pred"] is None or side is None:
+            continue
+        side.setdefault(r["pivot_mid"], []).append(r["other_norm"])
+        # pred is a function of the pivot mention, so the Spark rejoin's
+        # (url, pivot_mid, pred) key is pivot_mid within one document
+        pivots[r["pivot_mid"]] = (r["pivot_norm"], r["pred"])
+    out: set[tuple[str, str, str]] = set()
+    for pv, (pivot_norm, pred) in pivots.items():
+        if any(pv not in sides[s] or (s, pred) not in rules
+               for s in slot_labels):
+            continue
+        for s in slot_labels:
+            for out_pred in rules[(s, pred)]:
+                for norm in sides[s][pv]:
+                    out.add((pivot_norm, out_pred, norm))
     return out

@@ -311,7 +311,8 @@ def analyze_sentences(docs: DataFrame, pred_vocab: list[str]) -> DataFrame:
                     out["url"].append(url)
                     for c in cols[1:]:
                         out[c].append(s[c])
-            yield pd.DataFrame(out, columns=cols)
+            if out["url"]:  # see graph._nonempty
+                yield pd.DataFrame(out, columns=cols)
 
     return docs.select("url", "text").mapInPandas(batches, schema=SENTENCES_SCHEMA)
 

@@ -3,8 +3,9 @@
 Scale notes:
 - filter_pages runs BEFORE any UDF so Catalyst pushes lang/null predicates
   into the parquet/Iceberg scan (UDFs are pushdown barriers).
-- dedup is an explicit row_number over (url) — dropDuplicates picks an
-  arbitrary row per key and would break run-to-run determinism.
+- dedup_latest_text picks the latest row per url with a deterministic
+  max(struct) — dropDuplicates picks an arbitrary row per key and would
+  break run-to-run determinism.
 - resolve_text is the only stage that touches the (huge, binary) html column;
   its output drops html immediately so every downstream shuffle moves text
   only (column pruning at the source reads html just for this stage).
@@ -16,7 +17,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from ..extract.html import extract_text
 
@@ -28,29 +29,6 @@ def filter_pages(pages: DataFrame, lang: str = "en") -> DataFrame:
     return pages.filter(
         (F.col("lang") == lang)
         & (F.col("text").isNotNull() | F.col("html").isNotNull())
-    )
-
-
-def dedup_latest_per_url(pages: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Exactly one row per url: latest warc_ts, ties broken by html length
-    then text — fully deterministic (never dropDuplicates).
-
-    num_partitions pins the url-hash partitioning width. This matters when a
-    Python-heavy stage (the extractor) follows: AQE coalesces shuffles by
-    BYTES and will happily collapse a small-but-CPU-expensive corpus onto a
-    few cores; an explicit user repartition is exempt from AQE coalescing,
-    and the window reuses the same url partitioning (no extra shuffle)."""
-    if num_partitions:
-        pages = pages.repartition(num_partitions, "url")
-    w = Window.partitionBy("url").orderBy(
-        F.col("warc_ts").desc(),
-        F.length(F.col("html")).desc_nulls_last(),
-        F.col("text").desc_nulls_last(),
-    )
-    return (
-        pages.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
     )
 
 
@@ -105,23 +83,6 @@ def dedup_latest_text(docs: DataFrame, num_partitions: int | None = None) -> Dat
         "url", "_b.warc_ts", "_b.text", *[f"_b.{c}" for c in extra]
     )
     return out.select(*docs.columns)
-
-
-def urls_are_unique(docs: DataFrame) -> bool:
-    """EXACT probe: does this corpus already have one row per url? A narrow
-    aggregation over the url column only (two counts in one pass; column
-    pruning keeps text/html out of the scan) — ~50 bytes/row of shuffle vs
-    the full-text shuffle a latest-per-url dedup costs. Used by
-    dedup_mode='auto' (plans/pipeline.py): re-runs over an
-    already-deduplicated corpus (yesterday's cleaned snapshot, a
-    checkpointed docs stage, a test fixture) can skip the pipeline's ONLY
-    corpus-wide text shuffle entirely."""
-    import pyspark.sql.functions as F2
-
-    row = docs.select(
-        F2.count("*").alias("n"), F2.count_distinct("url").alias("d")
-    ).first()
-    return row["n"] == row["d"]
 
 
 def resolve_text(pages: DataFrame, metrics: dict | None = None) -> DataFrame:

@@ -166,6 +166,63 @@ def _canonicalize_and_support(
     )
 
 
+def _is_slot_table(pred_rules: DataFrame, arg_slots) -> bool:
+    """True for a (slot, pred, pred_out) rule table, False for the binary
+    (subrel_a, subrel_b, pred_a, pred_b) table — which encodes only slots
+    (a, b), so any other arity raises instead of dropping slots."""
+    cols = set(pred_rules.columns)
+    if {"slot", "pred", "pred_out"} <= cols:
+        return True
+    if len(arg_slots) != 2:
+        raise ValueError(
+            f"arity {len(arg_slots) + 1} needs a (slot, pred, pred_out) "
+            f"rule table; the binary-rule table {sorted(cols)} only "
+            "supports slots (a, b)"
+        )
+    return False
+
+
+def slot_rule_rows(
+    pred_rules: DataFrame, arg_slots
+) -> tuple[list[tuple[str, str, str]], list[str]]:
+    """The rule table (either schema) collected on the driver as
+    (slot, pred, pred_out) rows, plus the slot labels they join on — the
+    form kernels.doc_pairs consumes. A binary row (p#a, p#b, pa, pb)
+    becomes (a, p, pa) and (b, p, pb), slots a/b literal as in
+    rejoin_triples; a row whose subrels do not end in #a/#b, or whose
+    preds differ, can never fire there (the a and b sides join on pred)
+    and is dropped."""
+    if _is_slot_table(pred_rules, arg_slots):
+        rows = pred_rules.collect()
+        return ([(r["slot"], r["pred"], r["pred_out"]) for r in rows],
+                [s for _, s in arg_slots])
+    out = []
+    for r in pred_rules.collect():
+        pred_a, _, slot_a = (r["subrel_a"] or "").rpartition("#")
+        pred_b, _, slot_b = (r["subrel_b"] or "").rpartition("#")
+        if (slot_a, slot_b) == ("a", "b") and pred_a == pred_b:
+            out += [("a", pred_a, r["pred_a"]), ("b", pred_b, r["pred_b"])]
+    return out, ["a", "b"]
+
+
+def rejoin(
+    subrels: DataFrame,
+    pred_rules: DataFrame,
+    arg_slots,
+    canon_map: DataFrame | None = None,
+    url_level: bool = False,
+) -> DataFrame:
+    """The Spark rejoin for either rule-table schema: a (slot, pred,
+    pred_out) table takes rejoin_nary over arg_slots' labels (any arity),
+    the binary table takes the 3-ary rejoin_triples. url_level=True
+    returns the distinct (subj, pred, obj, url) evidence pairs instead of
+    aggregated support (the streaming delta granularity)."""
+    if _is_slot_table(pred_rules, arg_slots):
+        return rejoin_nary(subrels, pred_rules, [s for _, s in arg_slots],
+                           canon_map, url_level)
+    return rejoin_triples(subrels, pred_rules, canon_map, url_level)
+
+
 def rejoin_nary(
     subrels: DataFrame,
     slot_rules: DataFrame,

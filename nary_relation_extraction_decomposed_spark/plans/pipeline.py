@@ -39,26 +39,6 @@ from ..operators import er, graph, mentions as M, textprep, triples as T
 from ..operators.kernels import MAX_PATH_LEN, TOKEN_WINDOW
 
 
-def _rejoin(subrels, pred_rules, canon, config, url_level=False):
-    """Rejoin dispatch on the rule-table schema: a (slot, pred, pred_out)
-    table takes the GENERALIZED n-ary path (any arity = len(arg_slots)+1);
-    the legacy (subrel_a, subrel_b, pred_a, pred_b) binary-rule table takes
-    the 3-ary specialization. url_level=True returns the distinct
-    (subj, pred, obj, url) evidence pairs instead of aggregated support
-    (the streaming delta granularity)."""
-    cols = set(pred_rules.columns)
-    if {"slot", "pred", "pred_out"} <= cols:
-        slots = [s for _, s in config.arg_slots]
-        return T.rejoin_nary(subrels, pred_rules, slots, canon, url_level)
-    if len(config.arg_slots) != 2:
-        raise ValueError(
-            f"arity {len(config.arg_slots) + 1} needs a (slot, pred, pred_out) "
-            f"rule table; the binary-rule table {sorted(cols)} only supports "
-            "slots (a, b)"
-        )
-    return T.rejoin_triples(subrels, pred_rules, canon, url_level)
-
-
 @dataclass(frozen=True)
 class PipelineConfig:
     pivot_type: str = "DRUG"
@@ -75,36 +55,34 @@ class PipelineConfig:
     # see operators/kernels.bfs_evidence
     co_mention_edges: bool = True
     token_window: int | None = TOKEN_WINDOW
-    # round 6: ALSO fuse decompose + rejoin + per-doc triple dedup into the
-    # doc mapInPandas (graph.doc_kg_pairs) — the rejoin key
-    # (url, pivot_mid, pred) never leaves a document, so the subrel
-    # materialization (localCheckpoint write + two re-reads) and
-    # corpus-wide self-join are pure overhead when only `triples` is
-    # consumed; the support aggregation becomes the pipeline's ONLY
-    # corpus-level exchange (measured 13.2x JVM bytes/doc, 2.35x wall —
-    # BENCH/BASELINE.md round 6). Trade-off: this lane never surfaces the
-    # sentences/evidence/subrels frames (None in the result), and
-    # canonicalizing pays a second detection pass (detect_mentions) for
-    # the canon map's corpus mention surfaces. Both rule-table schemas
-    # dispatch inside doc_kg_pairs (binary subrel pairs AND the generalized
-    # (slot, pred, pred_out) any-arity tables), mirroring _rejoin.
+    # fuse decompose + rejoin + per-doc triple dedup into the doc
+    # mapInPandas as well (graph.doc_kg_pairs, whose per-doc rejoin is
+    # kernels.doc_pairs): the rejoin key (url, pivot_mid, pred) never
+    # leaves a document, so the subrel materialization and the corpus-wide
+    # self-join of the default lane are skipped, and the support
+    # aggregation is the only corpus-level exchange (13.2x fewer JVM
+    # bytes/doc, 2.35x wall — BENCH/BASELINE.md round 6). Trade-off: this lane
+    # never surfaces the sentences/evidence/subrels frames (None in the
+    # result), and canonicalizing pays a second detection pass
+    # (detect_mentions) for the canon map's corpus mention surfaces. Both
+    # rule-table schemas are accepted (triples.slot_rule_rows).
     fused_rejoin: bool = False
     # latest-per-url dedup mode — the pipeline's ONLY corpus-wide
     # full-text shuffle:
     #   'latest' (default): always dedup (a crawl always has re-crawls);
-    #   'auto':  exact narrow probe (textprep.urls_are_unique, ~50 B/row)
-    #            first — a corpus that is already one-row-per-url (re-run
-    #            over a cleaned snapshot) skips the text shuffle entirely,
-    #            making the combined pass truly zero-shuffle from parquet
-    #            to evidence;
-    #   'skip':  caller asserts one row per url.
-    # The one-row-per-url contract that doc_kg_combined/doc_kg_pairs
-    # require holds in all three modes.
+    #   'skip':  caller asserts one row per url (a cleaned snapshot).
+    # doc_kg_combined/doc_kg_pairs require one row per url.
     dedup_mode: str = "latest"
     # partitioning floor for Python-heavy stages (None -> 2x cores); see
     # operators/graph.py on why AQE byte-coalescing must not size these
     python_parallelism: int | None = None
     collect_metrics: bool = False
+
+    def __post_init__(self):
+        if self.dedup_mode not in ("latest", "skip"):
+            raise ValueError(
+                f"dedup_mode must be 'latest' or 'skip', not {self.dedup_mode!r}"
+            )
 
 
 @dataclass
@@ -176,10 +154,7 @@ def _stages(
         # overcount; the checkpointed runner's manifest rows are exact).
         pre = textprep.filter_pages(pages, config.lang)
         resolved = textprep.resolve_text(pre, metrics=metrics)
-        if config.dedup_mode == "skip" or (
-            config.dedup_mode == "auto"
-            and textprep.urls_are_unique(pre.select("url"))
-        ):
+        if config.dedup_mode == "skip":
             # the dedup's repartition doubled as the Python-stage width
             # pin; without it, only top up when the source is
             # under-partitioned (pre-partitioned sources keep the true
@@ -218,8 +193,8 @@ def _stages(
             ), ("docs", "gazetteer"), persist=True, views=_combined_views),
         ]
         mentions_from = "combined"
-        triples = Stage("triples", lambda f: _rejoin(
-            f["subrels"], pred_rules, f.get("canon"), config,
+        triples = Stage("triples", lambda f: T.rejoin(
+            f["subrels"], pred_rules, config.arg_slots, f.get("canon"),
         ), ("combined", *canon_parents, "rules"))
     if config.canonicalize:
         lane.append(Stage("canon", lambda f: er.canonical_map(

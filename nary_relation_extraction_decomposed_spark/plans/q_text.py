@@ -46,10 +46,11 @@ SELECT doc_id, lang,
        WHEN {_DUCK_DE} >= {_DUCK_FR} AND {_DUCK_DE} > 0 THEN 'de'
        WHEN {_DUCK_FR} > 0 THEN 'fr'
        ELSE 'und' END AS lang_pred,
+  CASE WHEN text IS NOT NULL THEN
   round(least({_DUCK_TOKS} / 100.0, 1.0) * 0.5
       + least({_DUCK_EN} * 5.0 / greatest({_DUCK_TOKS}, 1), 1.0) * 0.4
       + (1 - least({_DUCK_PUNCT} * 1.0 / greatest({_DUCK_TOKS}, 1), 1.0)) * 0.1,
-    6) AS q_score,
+    6) END AS q_score,
   CAST({_DUCK_TOKS} AS BIGINT) AS n_tokens,
   CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT)
     AS n_bpe_ish,

@@ -25,7 +25,7 @@ import time
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..operators import textprep
+from ..operators import textprep, triples as T
 from ..plans.pipeline import PipelineConfig, run_pipeline
 
 PAGES_SCHEMA = (
@@ -89,9 +89,8 @@ def stream_pages_to_triples(
             return
         res = run_pipeline(batch_df, gazetteer, pred_rules, config)
         if url_level:
-            from ..plans.pipeline import _rejoin
-
-            out = _rejoin(res.subrels, pred_rules, None, config, url_level=True)
+            out = T.rejoin(res.subrels, pred_rules, config.arg_slots,
+                           url_level=True)
             # processed-urls manifest (1 row per url per batch): a re-crawl
             # whose new version yields NO triples leaves no trace in the
             # delta table itself, so without this the merge could not know

@@ -58,8 +58,7 @@ def test_null_text_never_survives(spark, corpus):
     """Exact dedup inner-joins on md5(text), and md5(NULL) never joins — so
     a null-text doc escaping the quality gate would also escape the
     min-id-per-content rule (two null-text docs would both survive). The
-    gate must drop them at any min_quality, although quality_score_col
-    scores NULL text 0.9."""
+    gate must drop them at any min_quality."""
     nulls = spark.createDataFrame(
         [(8, None, "en"), (9, None, "en"), (10, None, "de")], corpus.schema
     )
@@ -72,6 +71,38 @@ def test_null_text_never_survives(spark, corpus):
     # the zero-token junk doc passes a 0.0 gate; with fewer tokens than
     # the shingle size it has no shingles, so it is nobody's near-dup
     assert _ids(stages["sampled"]) == [1, 5, 6, 7]
+
+
+def test_quality_score_null_text_is_null(spark):
+    """quality_score_col and its DuckDB twin (the text_metrics oracle)
+    score NULL text NULL, not 0.9 (least(NULL, 1.0) is 1.0 in both
+    engines), and agree on every other row."""
+    import duckdb
+
+    from nary_relation_extraction_decomposed_spark.functions.text_metrics import (
+        quality_score_col,
+    )
+    from nary_relation_extraction_decomposed_spark.plans.q_text import ORACLES
+
+    rows = [(1, BASE, "en"), (2, None, "en"), (3, "", "en"),
+            (4, "!!! ???", "en"), (5, "the data, for the data.", "en")]
+    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    got = {r.doc_id: r.q for r in df.select(
+        "doc_id", quality_score_col(F.col("text")).alias("q")).collect()}
+    assert got[2] is None
+    assert all(got[i] is not None for i in (1, 3, 4, 5))
+
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR, "
+                    "lang VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?, ?)", rows)
+        twin = {i: q for i, q in con.execute(
+            f"SELECT doc_id, q_score FROM ({ORACLES['text_metrics']})"
+        ).fetchall()}
+    finally:
+        con.close()
+    assert twin == got
 
 
 def test_neardup_verification_threshold(corpus):

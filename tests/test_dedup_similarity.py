@@ -446,14 +446,12 @@ def test_hyperplane_signs_fixture_matches_engine(spark):
                 assert engine_sgn == want[(pos, t, p)], (pos, t, p)
 
 
-def test_er_minhash_distinct_shapes_identical(spark, monkeypatch):
+def test_er_minhash_distinct_shapes_identical(spark):
     """Round-6 AQE-starvation fix: minhash_signatures dedups surfaces via
     explicit repartition(n, col) + dropDuplicates (one exchange, parallel)
     instead of .distinct() (whose small shuffle output AQE coalesces to ONE
-    partition, single-threading the gram explode + 64-hash stage). The two
-    shapes must be value-identical — including on inputs WITH duplicate
-    surfaces, which exercises the dedup itself. NARY_ER_DISTINCT=plain is
-    the diagnostic re-selection of the old shape (tools/ab_harness.py)."""
+    partition, single-threading the gram explode + 64-hash stage). Inputs
+    WITH duplicate surfaces exercise the dedup itself."""
     from nary_relation_extraction_decomposed_spark.operators.er import (
         minhash_signatures,
     )
@@ -463,24 +461,43 @@ def test_er_minhash_distinct_shapes_identical(spark, monkeypatch):
          ("zz unrelated",), ("a b c",), ("a b c",)],
         "surface_norm string",
     )
+    got = [r["surface_norm"] for r in minhash_signatures(surfaces).collect()]
+    assert sorted(got) == ["a b c", "acme corp", "acme corporation",
+                           "zz unrelated"]  # duplicates deduped
 
-    def sig_set(shape: str):
-        monkeypatch.setenv("NARY_ER_DISTINCT", shape)
-        return {
-            (r["surface_norm"], tuple(r["sig"]), tuple(r["shingles"]))
-            for r in minhash_signatures(surfaces).collect()
-        }
-
-    plain, repart = sig_set("plain"), sig_set("repart")
-    assert plain == repart
-    assert len(repart) == 4  # duplicates deduped by both shapes
-
-    # the repart shape pays exactly ONE exchange: the explicit repartition
-    # clusters by surface_norm, so neither the dedup nor the 64-min
-    # aggregate re-shuffles
-    monkeypatch.setenv("NARY_ER_DISTINCT", "repart")
+    # exactly ONE exchange: the explicit repartition clusters by
+    # surface_norm, so neither the dedup nor the 64-min aggregate
+    # re-shuffles (a fresh, unexecuted frame: an executed adaptive plan
+    # prints its initial and final plans both)
     plan = minhash_signatures(surfaces)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
+def test_word_ngrams_col_binds_tokens_once(spark):
+    """word_ngrams_col runs its token regex once per text: the lambda
+    reads the tokens through an outer lambda variable (a lambda that
+    referenced the regexp_extract_all column itself would rerun it once
+    per token, quadratic in the text length). Values match a Python
+    reference for texts shorter than, equal to and longer than n, and NULL."""
+    import re
+
+    n = 3
+    col = D.word_ngrams_col(F.col("text"), n)
+    assert str(col).count("regexp_extract_all") == 1, str(col)
+
+    def ref(text):
+        if text is None:
+            return []
+        toks = re.findall("[a-z0-9]+", text.lower())
+        return sorted({" ".join(toks[i:i + n])
+                       for i in range(len(toks) - n + 1)})
+
+    words = [f"W{i % 7}" for i in range(60)]
+    texts = [None, "", "one", "one two", "One two, three!",
+             " ".join(words), " ".join(words[:4] + words[:4])]
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    got = {r.id: list(r.g) for r in df.select("id", col.alias("g")).collect()}
+    assert got == {i: ref(t) for i, t in enumerate(texts)}
 
 
 def test_widen_if_narrow_probe_vs_exchange_dispatch(spark):

@@ -14,6 +14,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from nary_relation_extraction_decomposed_spark.operators.kernels import (
     TOKEN_WINDOW,
@@ -152,6 +153,45 @@ def test_combined_pass_equals_staged_operators(spark, fixture_dir):
     assert a == b and len(a) > 100
 
 
+def test_doc_passes_accept_batches_without_output(spark):
+    """A batch whose documents yield no rows (empty or NULL text, no
+    mentions) must produce an empty result, not an Arrow conversion error
+    on the array columns of an empty output frame."""
+    from nary_relation_extraction_decomposed_spark.operators.graph import (
+        doc_graph_subrels,
+        doc_kg_combined,
+        doc_kg_pairs,
+    )
+    from nary_relation_extraction_decomposed_spark.operators.mentions import (
+        analyze_sentences,
+        detect_mentions,
+    )
+
+    gaz = spark.createDataFrame(
+        [("alpha", "E1", "PIV"), ("beta", "E2", "A")],
+        "surface_norm string, ent_id string, ent_type string",
+    )
+    rules = spark.createDataFrame(
+        [("a", "links", "L")], "slot string, pred string, pred_out string"
+    )
+    slots = [("A", "a")]
+    docs = spark.createDataFrame(
+        [("u1", ""), ("u2", None), ("u3", "no entities here")],
+        "url string, text string",
+    ).coalesce(1)
+    combined = doc_kg_combined(docs, gaz, ["links"], "PIV", slots)
+    assert combined.filter("kind = 2").count() == 0
+    assert doc_kg_pairs(docs, gaz, ["links"], "PIV", slots, rules).count() == 0
+    empty = docs.filter("url = 'u1'")
+    assert doc_kg_combined(empty, gaz, ["links"], "PIV", slots).count() == 0
+    assert analyze_sentences(empty, ["links"]).count() == 0
+    mentionless = doc_graph_subrels(
+        detect_mentions(docs, gaz), analyze_sentences(docs, ["links"]),
+        "PIV", slots,
+    )
+    assert mentionless.count() == 0
+
+
 def test_pairs_fusion_equals_staged(spark, fixture_dir):
     """doc_kg_pairs (detection+BFS+decompose+PER-DOC REJOIN in one
     mapInPandas, VERDICT r5 #1) must reproduce the staged
@@ -214,7 +254,7 @@ def test_pairs_fusion_equals_staged(spark, fixture_dir):
 def test_fused_pipeline_equals_unfused(spark, fixture_dir):
     """run_pipeline's combined default == the staged operator chain
     (detect_mentions -> analyze_sentences -> doc_graph_subrels ->
-    subrels_from_evidence -> _rejoin) end to end (triples with support)."""
+    subrels_from_evidence -> rejoin) end to end (triples with support)."""
     from nary_relation_extraction_decomposed_spark.operators.graph import (
         doc_graph_subrels,
     )
@@ -228,9 +268,9 @@ def test_fused_pipeline_equals_unfused(spark, fixture_dir):
         resolve_text,
     )
     from nary_relation_extraction_decomposed_spark.operators.triples import (
+        rejoin,
         subrels_from_evidence,
     )
-    from nary_relation_extraction_decomposed_spark.plans.pipeline import _rejoin
 
     pages = spark.read.parquet(os.path.join(fixture_dir, "pages.parquet"))
     pages = pages.filter(F.xxhash64("url") % 8 == 0)
@@ -251,7 +291,7 @@ def test_fused_pipeline_equals_unfused(spark, fixture_dir):
         analyze_sentences(docs, list(cfg.pred_vocab)),
         cfg.pivot_type, list(cfg.arg_slots),
     )
-    staged = rows(_rejoin(subrels_from_evidence(ev), rules, None, cfg))
+    staged = rows(rejoin(subrels_from_evidence(ev), rules, cfg.arg_slots))
 
     want = triples()
     assert want == staged and want
@@ -265,11 +305,13 @@ def test_fused_pipeline_equals_unfused(spark, fixture_dir):
 
 
 def test_dedup_mode_auto_and_skip(spark, fixture_dir):
-    """dedup_mode='auto' (round 4): on a corpus WITH duplicate urls the
-    probe must keep the latest-per-url dedup (triples == default mode);
-    on a PRE-DEDUPED corpus it must skip the pipeline's only full-text
-    shuffle and still produce identical triples; 'skip' on the pre-deduped
-    corpus likewise."""
+    """dedup_mode='skip' on a PRE-DEDUPED corpus skips the pipeline's only
+    full-text shuffle and still produces the triples of the default
+    'latest' mode; any other mode is rejected."""
+    from nary_relation_extraction_decomposed_spark.operators.textprep import (
+        dedup_latest_text,
+    )
+
     pages = spark.read.parquet(os.path.join(fixture_dir, "pages.parquet"))
     pages = pages.filter(F.xxhash64("url") % 8 == 0)
     gaz = spark.read.parquet(os.path.join(fixture_dir, "gazetteer.parquet"))
@@ -280,23 +322,15 @@ def test_dedup_mode_auto_and_skip(spark, fixture_dir):
         df = run_pipeline(pg, gaz, rules, cfg).triples
         return {tuple(r) for r in df.select("subj", "pred", "obj", "support").collect()}
 
-    # fixture corpus HAS duplicate urls -> auto must dedup
-    want = triples(pages, "latest")
-    assert triples(pages, "auto") == want and want
-
-    # pre-deduped corpus -> auto skips, skip skips, results identical
-    from nary_relation_extraction_decomposed_spark.operators.textprep import (
-        dedup_latest_per_url,
-        urls_are_unique,
-    )
-
-    clean = dedup_latest_per_url(pages).persist()
-    assert not urls_are_unique(pages.select("url"))
-    assert urls_are_unique(clean.select("url"))
+    # the fixture corpus HAS duplicate urls; its deduped copy has none
+    clean = dedup_latest_text(pages).persist()
+    n_urls = pages.select("url").distinct().count()
+    assert clean.count() == n_urls < pages.count()
     want_clean = triples(clean, "latest")
-    assert triples(clean, "auto") == want_clean
     assert triples(clean, "skip") == want_clean and want_clean
     clean.unpersist()
+    with pytest.raises(ValueError, match="dedup_mode"):
+        PipelineConfig(dedup_mode="auto")
 
 
 def test_golden_triples_invariant_under_co_mention(spark, fixture_dir):

@@ -10,6 +10,8 @@ from nary_relation_extraction_decomposed_spark.functions import textnorm
 from nary_relation_extraction_decomposed_spark.operators.kernels import (
     GazetteerIndex,
     detect_mentions_in_text,
+    doc_evidence,
+    doc_pairs,
     tokenize_with_offsets,
 )
 
@@ -149,3 +151,38 @@ def test_gazetteer_longest_match():
     # offsets slice the original text
     for m in ms:
         assert text[m["begin"]:m["end"]] == m["surface"]
+
+
+def test_doc_evidence_and_doc_pairs_by_hand():
+    """doc_evidence resolves surfaces and the pivot's nearest predicate;
+    doc_pairs rejoins one document: every slot must fill with a non-null
+    pred and have a rule, every rule row emits, unknown slots never join."""
+    ms = [
+        {"mention_id": 0, "ent_type": "PIV", "sent_id": 0,
+         "surface_norm": "alpha", "tok_begin": 0, "tok_end": 1},
+        {"mention_id": 1, "ent_type": "A", "sent_id": 0,
+         "surface_norm": "beta", "tok_begin": 1, "tok_end": 2},
+        {"mention_id": 2, "ent_type": "B", "sent_id": 0,
+         "surface_norm": "gamma", "tok_begin": 2, "tok_end": 3},
+    ]
+    ev = doc_evidence(1, ms, {0: (["links", "binds"], [3, 5])}, [6],
+                      "PIV", [("A", "a"), ("B", "b")])
+    assert [(r["pivot_norm"], r["other_norm"], r["slot"], r["pred"],
+             r["pivot_sent"]) for r in ev] == [
+        ("alpha", "beta", "a", "links", 0),
+        ("alpha", "gamma", "b", "links", 0),
+    ]
+    rules = {("a", "links"): ["L_A", "L_A2"], ("b", "links"): ["L_B"]}
+    assert doc_pairs(ev, rules, ["a", "b"]) == {
+        ("alpha", "L_A", "beta"), ("alpha", "L_A2", "beta"),
+        ("alpha", "L_B", "gamma"),
+    }
+    # a slot without a rule, a missing slot, a pred-less pivot: nothing
+    assert doc_pairs(ev, {("a", "links"): ["L_A"]}, ["a", "b"]) == set()
+    assert doc_pairs(ev, {**rules, ("c", "links"): ["L_C"]},
+                     ["a", "b", "c"]) == set()
+    assert doc_pairs([{**r, "pred": None} for r in ev], rules,
+                     ["a", "b"]) == set()
+    # no predicate token in the pivot's sentence -> pred None
+    assert {r["pred"] for r in doc_evidence(
+        1, ms, {0: ([], [])}, [6], "PIV", [("A", "a"), ("B", "b")])} == {None}

@@ -109,6 +109,52 @@ def test_binary_rule_table_rejects_higher_arity(spark):
         run_pipeline(pages, _gaz(spark), legacy_rules, CFG_4ARY).triples.count()
 
 
+def test_binary_rules_fire_only_on_matching_pred_pairs(spark):
+    """Hand-computed binary rule table, both lanes. Only a rule whose two
+    subrels are p#a and p#b with the SAME p can fire (the Spark rejoin
+    joins the a and b sides on pred):
+    (links#a, links#b, L_A, L_B)  fires on u1;
+    (links#a, binds#b, M_A, M_B)  never (preds differ);
+    (binds#a, links#b, N_A, N_B)  never (preds differ; u2 has binds);
+    (links#b, links#a, S_A, S_B)  never (swapped slots).
+    A per-subrel translation of the binary rows would also emit M_A/N_B/
+    S_A/S_B on u1 and N_A/M_B on u2. u3 has no slot-b filler."""
+    import dataclasses
+
+    from nary_relation_extraction_decomposed_spark.operators.triples import (
+        slot_rule_rows,
+    )
+
+    pages = _pages(spark, [
+        ("u1", "alpha beta gamma links"),
+        ("u2", "alpha beta gamma binds"),
+        ("u3", "alpha beta links"),
+    ])
+    rules = spark.createDataFrame(
+        [("links#a", "links#b", "L_A", "L_B"),
+         ("links#a", "binds#b", "M_A", "M_B"),
+         ("binds#a", "links#b", "N_A", "N_B"),
+         ("links#b", "links#a", "S_A", "S_B")],
+        "subrel_a string, subrel_b string, pred_a string, pred_b string",
+    )
+    cfg = PipelineConfig(
+        pivot_type="PIV", arg_slots=(("A", "a"), ("B", "b")),
+        pred_vocab=("links", "binds"), canonicalize=False,
+    )
+    assert slot_rule_rows(rules, cfg.arg_slots) == (
+        [("a", "links", "L_A"), ("b", "links", "L_B")], ["a", "b"]
+    )
+    want = {("alpha", "L_A", "beta", 1), ("alpha", "L_B", "gamma", 1)}
+    for fused in (False, True):
+        res = run_pipeline(pages, _gaz(spark), rules,
+                           dataclasses.replace(cfg, fused_rejoin=fused))
+        got = {
+            (r["subj"], r["pred"], r["obj"], r["support"])
+            for r in res.triples.collect()
+        }
+        assert got == want, fused
+
+
 def test_incremental_new_triples(spark):
     """Incremental run: triples from a grown corpus diffed against the
     previous snapshot = exactly the triples whose key did not exist."""

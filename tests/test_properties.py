@@ -163,12 +163,12 @@ def test_fused_rejoin_checkpoint_resume(spark, inputs, tmp_path):
 
 def test_dedup_idempotence(spark, inputs):
     from nary_relation_extraction_decomposed_spark.operators.textprep import (
-        dedup_latest_per_url,
+        dedup_latest_text,
     )
 
     pages, _, _ = inputs
-    once = dedup_latest_per_url(pages)
-    twice = dedup_latest_per_url(once)
+    once = dedup_latest_text(pages)
+    twice = dedup_latest_text(once)
     assert once.count() == twice.count() == pages.select("url").distinct().count()
     a = {tuple(r) for r in once.select("url", "warc_ts").collect()}
     b = {tuple(r) for r in twice.select("url", "warc_ts").collect()}
