@@ -48,13 +48,11 @@ def main() -> None:
     )
     ap.add_argument(
         "--fused-rejoin", action="store_true",
-        help="triples-only lane: fuse decompose+rejoin into the doc pass "
-             "(graph.doc_kg_pairs), the shape bench.py's kg entries "
-             "measure. Off by default because canonicalization (on by "
-             "default) then needs a second detection pass. Stages: "
-             "docs -> pairs [-> mentions -> canon] -> triples; the default "
-             "lane is docs -> combined [-> canon] -> triples (checkpointed "
-             "per stage with --checkpoint)",
+        help="triples-only doc pass: emit only the per-doc triple pairs "
+             "(plus mentions for canonicalization) and skip mention-free "
+             "docs, the shape bench.py's kg entries measure. Either way "
+             "the stages are docs -> combined [-> canon] -> triples "
+             "(checkpointed per stage with --checkpoint)",
     )
     ap.add_argument(
         "--prev-triples", default=None,

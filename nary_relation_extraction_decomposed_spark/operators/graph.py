@@ -8,10 +8,11 @@ at MAX_MENTIONS_PER_DOC mentions upstream, deterministically).
 The per-document work is written once, in operators/kernels.py:
 doc_evidence (BFS + surfaces + nearest predicate) and doc_pairs (the
 per-doc rejoin). Two entry shapes call them:
-- doc_kg_combined / doc_kg_pairs: ONE pass over docs(url, text) with one
-  row per url (the pipeline's docs contract) — detection, sentence
-  analysis and BFS in the same call, zero shuffles. They share one per-doc
-  loop (_doc_pass) and differ only in what they emit;
+- doc_kg_combined: ONE pass over docs(url, text) with one row per url
+  (the pipeline's docs contract) — detection, sentence analysis, BFS and
+  the per-doc rejoin in the same call, zero shuffles. It emits a tagged
+  row stream whose kinds (sentence, mention, evidence, triple pair) the
+  caller chooses;
 - doc_graph_subrels: the staged shape over separate mention and sentence
   frames — a tagged union of both, hash-partitioned and sorted by url,
   then a pandas groupby per Arrow batch with url-boundary carry. At scale
@@ -183,59 +184,13 @@ def doc_graph_subrels(
     return tagged.mapInPandas(batches, schema=EVIDENCE_SUBREL_SCHEMA)
 
 
-def _doc_pass(
-    docs: DataFrame,
-    gazetteer: DataFrame,
-    pred_vocab: list[str],
-    pivot_type: str,
-    arg_slots: list[tuple[str, str]],
-    max_path_len: int,
-    co_mention_edges: bool,
-    token_window: int | None,
-    schema: str,
-    emit,
-    every_doc: bool,
-) -> DataFrame:
-    """The per-document loop of doc_kg_combined and doc_kg_pairs: ONE
-    mapInPandas over docs(url, text) with the gazetteer index broadcast.
-    Per non-empty document: detect_mentions_in_text, sentence_predicates
-    and kernels.doc_evidence. emit(analyzed) turns one Arrow batch's
-    (url, sentences, mentions, evidence) stream into its output frame.
-    every_doc=False skips mention-free docs before sentence analysis (an
-    emitter that reads only evidence never needs them)."""
-    from .mentions import build_gazetteer_index
+# the combined pass's row stream, one kind per row:
+# SENTENCE/MENTION = the staged frames' columns, EVIDENCE = the
+# EVIDENCE_SUBREL_SCHEMA columns, PAIR = one kernels.doc_pairs triple
+# (pivot_norm = subject, pred = output predicate, other_norm = object)
+SENTENCE, MENTION, EVIDENCE, PAIR = 0, 1, 2, 3
+ALL_KINDS = (SENTENCE, MENTION, EVIDENCE, PAIR)
 
-    sc = docs.sparkSession.sparkContext
-    bc = sc.broadcast(build_gazetteer_index(gazetteer))
-    vocab = frozenset(pred_vocab)
-
-    def analyzed(pdf: pd.DataFrame, gaz):
-        for url, text in zip(pdf["url"], pdf["text"]):
-            if not isinstance(text, str) or not text:
-                continue
-            ms = detect_mentions_in_text(text, gaz)
-            if not ms and not every_doc:
-                continue
-            sents = sentence_predicates(text, vocab)
-            ev = doc_evidence(
-                len(sents), ms,
-                {s["sent_id"]: (s["preds"], s["pred_toks"]) for s in sents},
-                [s["n_tokens"] for s in sents],
-                pivot_type, arg_slots, max_path_len, co_mention_edges,
-                token_window,
-            ) if ms else []
-            yield url, sents, ms, ev
-
-    def batches(it):
-        gaz = bc.value
-        for pdf in it:
-            yield from _nonempty(emit(analyzed(pdf, gaz)))
-
-    return docs.select("url", "text").mapInPandas(batches, schema=schema)
-
-
-# the combined pass's row stream: kind 0 = sentence, 1 = mention,
-# 2 = evidence (the EVIDENCE_SUBREL_SCHEMA columns)
 COMBINED_SCHEMA = (
     "url string, kind int, sent_id int, mention_id int, ent_id string, "
     "ent_type string, surface string, surface_norm string, begin int, "
@@ -254,79 +209,35 @@ def doc_kg_combined(
     pred_vocab: list[str],
     pivot_type: str,
     arg_slots: list[tuple[str, str]],
-    max_path_len: int = MAX_PATH_LEN,
-    co_mention_edges: bool = True,
-    token_window: int | None = TOKEN_WINDOW,
-) -> DataFrame:
-    """Detection + sentence analysis + graph BFS fused into ONE mapInPandas
-    over docs(url, text) — ZERO shuffles from docs to evidence.
-
-    Requires one row per url (dedup_latest_text's contract): each input row
-    is a complete document, so the per-doc graph never spans partitions and
-    doc_graph_subrels' repartition(n, url) + sortWithinPartitions + batch
-    carry are all unnecessary. Returns the COMBINED_SCHEMA union stream;
-    mentions_/sentences_/evidence_from_combined below recover the staged
-    frames by filter+project. Semantics are pinned equal to the staged
-    operators in tests/test_graph_enrichment.py."""
-    cols = _COMBINED_COLS
-    payload = cols[2:]
-
-    def emit(analyzed) -> pd.DataFrame:
-        out: dict[str, list] = {c: [] for c in cols}
-        for url, sents, ms, ev in analyzed:
-            for kind, rows in ((0, sents), (1, ms), (2, ev)):
-                for r in rows:
-                    out["url"].append(url)
-                    out["kind"].append(kind)
-                    for c in payload:
-                        out[c].append(r.get(c))
-        return pd.DataFrame(out, columns=cols)
-
-    return _doc_pass(docs, gazetteer, pred_vocab, pivot_type, arg_slots,
-                     max_path_len, co_mention_edges, token_window,
-                     COMBINED_SCHEMA, emit, every_doc=True)
-
-
-# url-level triple pairs: the input to _canonicalize_and_support (the
-# corpus-level canonical-label + support aggregation, the ONLY stage of the
-# whole pipeline whose key spans documents)
-PAIRS_SCHEMA = "url string, subj_norm string, pred string, obj_norm string"
-
-_PAIRS_COLS = [c.split()[0] for c in PAIRS_SCHEMA.split(", ")]
-
-
-def doc_kg_pairs(
-    docs: DataFrame,
-    gazetteer: DataFrame,
-    pred_vocab: list[str],
-    pivot_type: str,
-    arg_slots: list[tuple[str, str]],
     pred_rules: DataFrame,
     max_path_len: int = MAX_PATH_LEN,
     co_mention_edges: bool = True,
     token_window: int | None = TOKEN_WINDOW,
+    kinds: tuple[int, ...] = ALL_KINDS,
 ) -> DataFrame:
-    """Detection + sentence analysis + BFS evidence + decompose + REJOIN
-    fused into ONE mapInPandas over docs(url, text), emitting per-doc
-    DISTINCT (url, subj_norm, pred, obj_norm) pairs (PAIRS_SCHEMA).
+    """Detection + sentence analysis + graph BFS + decompose + per-doc
+    REJOIN fused into ONE mapInPandas over docs(url, text), with the
+    gazetteer index broadcast — ZERO shuffles from docs to triple pairs.
 
-    Rationale (VERDICT r5 #1, tools/stage_bytes.py at local[16], 329k
-    docs): the rejoin key (url, pivot_mid, pred) never leaves a document,
-    yet the default lane materializes the 5.3M-row subrel stream (~1.1 GB
-    localCheckpoint write + re-read per join side) and streams 26.8M
-    joined rows into an aggregation whose input is per-doc computable.
-    Here the only corpus-level traffic is the per-doc-distinct pairs into
-    the support aggregation's map-side partials.
+    Requires one row per url (dedup_latest_text's contract): each input row
+    is a complete document, so the per-doc graph never spans partitions and
+    doc_graph_subrels' repartition(n, url) + sortWithinPartitions + batch
+    carry are all unnecessary. Returns the COMBINED_SCHEMA union stream of
+    the row kinds in `kinds`; the *_from_combined views below recover each
+    kind by filter+project. A document without mentions has only SENTENCE
+    rows, so it is skipped before sentence analysis when those are not
+    asked for.
 
     pred_rules: the rule table (either schema), collected on the driver by
     triples.slot_rule_rows — broadcast-sized by the same contract the
     Spark rejoins rely on — and applied per document by kernels.doc_pairs.
-    Per-doc semantics are EXACTLY triples.rejoin over
-    subrels_from_evidence(evidence_from_combined(doc_kg_combined(...)))
-    with url_level=True; pinned equal in
-    tests/test_graph_enrichment.py::test_pairs_fusion_equals_staged and
-    tests/test_nary_arity.py. Callers finish with triples.pairs_to_triples
-    (canon map + support)."""
+    The rejoin key (url, pivot_mid, pred) never leaves a document, so the
+    PAIR rows are the per-doc-distinct output of triples.rejoin_triples /
+    rejoin_nary over the EVIDENCE rows' sub-relations with url_level=True;
+    pinned equal in tests/test_graph_enrichment.py and
+    tests/test_nary_arity.py. Semantics of the other kinds are pinned equal
+    to the staged operators there too."""
+    from .mentions import build_gazetteer_index
     from .triples import slot_rule_rows
 
     rows, slot_labels = slot_rule_rows(pred_rules, arg_slots)
@@ -335,26 +246,58 @@ def doc_kg_pairs(
     rules: dict[tuple[str, str], list[str]] = {}
     for slot, pred, out_pred in rows:
         rules.setdefault((slot, pred), []).append(out_pred)
+    bc = docs.sparkSession.sparkContext.broadcast(
+        build_gazetteer_index(gazetteer)
+    )
+    vocab = frozenset(pred_vocab)
+    every_doc = SENTENCE in kinds
+    cols = _COMBINED_COLS
+    payload = cols[2:]
 
-    def emit(analyzed) -> pd.DataFrame:
-        out: dict[str, list] = {c: [] for c in _PAIRS_COLS}
-        for url, _, _, ev in analyzed:
-            for s, p, o in doc_pairs(ev, rules, slot_labels):
-                out["url"].append(url)
-                out["subj_norm"].append(s)
-                out["pred"].append(p)
-                out["obj_norm"].append(o)
-        return pd.DataFrame(out, columns=_PAIRS_COLS)
+    def frame(pdf: pd.DataFrame, gaz) -> pd.DataFrame:
+        out: dict[str, list] = {c: [] for c in cols}
+        for url, text in zip(pdf["url"], pdf["text"]):
+            if not isinstance(text, str) or not text:
+                continue
+            ms = detect_mentions_in_text(text, gaz)
+            if not ms and not every_doc:
+                continue
+            sents = sentence_predicates(text, vocab)
+            ev = doc_evidence(
+                len(sents), ms,
+                {s["sent_id"]: (s["preds"], s["pred_toks"]) for s in sents},
+                [s["n_tokens"] for s in sents],
+                pivot_type, arg_slots, max_path_len, co_mention_edges,
+                token_window,
+            ) if ms else []
+            pairs = [
+                {"pivot_norm": s, "pred": p, "other_norm": o}
+                for s, p, o in doc_pairs(ev, rules, slot_labels)
+            ]
+            for kind, kind_rows in zip(ALL_KINDS, (sents, ms, ev, pairs)):
+                if kind not in kinds:
+                    continue
+                for r in kind_rows:
+                    out["url"].append(url)
+                    out["kind"].append(kind)
+                    for c in payload:
+                        out[c].append(r.get(c))
+        return pd.DataFrame(out, columns=cols)
 
-    return _doc_pass(docs, gazetteer, pred_vocab, pivot_type, arg_slots,
-                     max_path_len, co_mention_edges, token_window,
-                     PAIRS_SCHEMA, emit, every_doc=False)
+    def batches(it):
+        gaz = bc.value
+        for pdf in it:
+            yield from _nonempty(frame(pdf, gaz))
+
+    return docs.select("url", "text").mapInPandas(
+        batches, schema=COMBINED_SCHEMA
+    )
 
 
 def mentions_from_combined(combined: DataFrame) -> DataFrame:
     import pyspark.sql.functions as F
 
-    return combined.filter(F.col("kind") == 1).select(
+    return combined.filter(F.col("kind") == MENTION).select(
         "url", "mention_id", "ent_id", "ent_type", "surface",
         "surface_norm", "begin", "end", "sent_id", "tok_begin", "tok_end",
     )
@@ -363,7 +306,7 @@ def mentions_from_combined(combined: DataFrame) -> DataFrame:
 def sentences_from_combined(combined: DataFrame) -> DataFrame:
     import pyspark.sql.functions as F
 
-    return combined.filter(F.col("kind") == 0).select(
+    return combined.filter(F.col("kind") == SENTENCE).select(
         "url", "sent_id", "n_tokens", "pred", "preds", "pred_toks"
     )
 
@@ -372,4 +315,17 @@ def evidence_from_combined(combined: DataFrame) -> DataFrame:
     """EVIDENCE_SUBREL_SCHEMA view (same columns as doc_graph_subrels)."""
     import pyspark.sql.functions as F
 
-    return combined.filter(F.col("kind") == 2).select(*_EVIDENCE_COLS)
+    return combined.filter(F.col("kind") == EVIDENCE).select(*_EVIDENCE_COLS)
+
+
+def pairs_from_combined(combined: DataFrame) -> DataFrame:
+    """The PAIR rows as (url, subj_norm, pred, obj_norm), the input of
+    triples.pairs_to_triples (canon map + support)."""
+    import pyspark.sql.functions as F
+
+    return combined.filter(F.col("kind") == PAIR).select(
+        "url",
+        F.col("pivot_norm").alias("subj_norm"),
+        "pred",
+        F.col("other_norm").alias("obj_norm"),
+    )

@@ -3,13 +3,16 @@
 The north star's core relational shape:
 - DECOMPOSE: each candidate n-ary instance (pivot p; args a, b) is held ONLY
   as its binary sub-relations (p, a) and (p, b) — rows in `subrels`.
-- REJOIN: sub-relations sharing (url, pivot mention, pred) are equi-joined
-  back together (Catalyst picks SMJ/SHJ; AQE may demote/split), matched
-  against a broadcast rule table, and emit triples.
+- REJOIN: sub-relations sharing (url, pivot mention, pred) are joined
+  back together, matched against the rule table, and emit triples.
 
-All joins are DataFrame equi-joins on (url, pivot_mid[, pred]) — the same
-key the evidence stage already shuffled by, so at scale these reuse one
-partitioning; the rule table and canon map are broadcast (small sides).
+The pipeline rejoins per document (kernels.doc_pairs inside
+graph.doc_kg_combined; the key never leaves a document) and finishes with
+pairs_to_triples. rejoin_triples / rejoin_nary are the same rejoin as
+DataFrame equi-joins on (url, pivot_mid, pred) over a subrels frame, with
+the rule table and canon map broadcast (small sides): the reference the
+per-doc rejoin is tested against, and the operators of the staged
+kg_heavy bench entry and the rejoin oracle queries.
 """
 
 from __future__ import annotations
@@ -166,36 +169,29 @@ def _canonicalize_and_support(
     )
 
 
-def _is_slot_table(pred_rules: DataFrame, arg_slots) -> bool:
-    """True for a (slot, pred, pred_out) rule table, False for the binary
-    (subrel_a, subrel_b, pred_a, pred_b) table — which encodes only slots
-    (a, b), so any other arity raises instead of dropping slots."""
+def slot_rule_rows(
+    pred_rules: DataFrame, arg_slots
+) -> tuple[list[tuple[str, str, str]], list[str]]:
+    """The rule table (either schema) collected on the driver as
+    (slot, pred, pred_out) rows, plus the slot labels they join on — the
+    form kernels.doc_pairs consumes. A (slot, pred, pred_out) table serves
+    any arity. A binary (subrel_a, subrel_b, pred_a, pred_b) row
+    (p#a, p#b, pa, pb) becomes (a, p, pa) and (b, p, pb), slots a/b
+    literal as in rejoin_triples; a row whose subrels do not end in #a/#b,
+    or whose preds differ, can never fire there (the a and b sides join on
+    pred) and is dropped. The binary table encodes only slots (a, b), so
+    any other arity raises instead of dropping slots."""
     cols = set(pred_rules.columns)
     if {"slot", "pred", "pred_out"} <= cols:
-        return True
+        rows = pred_rules.collect()
+        return ([(r["slot"], r["pred"], r["pred_out"]) for r in rows],
+                [s for _, s in arg_slots])
     if len(arg_slots) != 2:
         raise ValueError(
             f"arity {len(arg_slots) + 1} needs a (slot, pred, pred_out) "
             f"rule table; the binary-rule table {sorted(cols)} only "
             "supports slots (a, b)"
         )
-    return False
-
-
-def slot_rule_rows(
-    pred_rules: DataFrame, arg_slots
-) -> tuple[list[tuple[str, str, str]], list[str]]:
-    """The rule table (either schema) collected on the driver as
-    (slot, pred, pred_out) rows, plus the slot labels they join on — the
-    form kernels.doc_pairs consumes. A binary row (p#a, p#b, pa, pb)
-    becomes (a, p, pa) and (b, p, pb), slots a/b literal as in
-    rejoin_triples; a row whose subrels do not end in #a/#b, or whose
-    preds differ, can never fire there (the a and b sides join on pred)
-    and is dropped."""
-    if _is_slot_table(pred_rules, arg_slots):
-        rows = pred_rules.collect()
-        return ([(r["slot"], r["pred"], r["pred_out"]) for r in rows],
-                [s for _, s in arg_slots])
     out = []
     for r in pred_rules.collect():
         pred_a, _, slot_a = (r["subrel_a"] or "").rpartition("#")
@@ -203,24 +199,6 @@ def slot_rule_rows(
         if (slot_a, slot_b) == ("a", "b") and pred_a == pred_b:
             out += [("a", pred_a, r["pred_a"]), ("b", pred_b, r["pred_b"])]
     return out, ["a", "b"]
-
-
-def rejoin(
-    subrels: DataFrame,
-    pred_rules: DataFrame,
-    arg_slots,
-    canon_map: DataFrame | None = None,
-    url_level: bool = False,
-) -> DataFrame:
-    """The Spark rejoin for either rule-table schema: a (slot, pred,
-    pred_out) table takes rejoin_nary over arg_slots' labels (any arity),
-    the binary table takes the 3-ary rejoin_triples. url_level=True
-    returns the distinct (subj, pred, obj, url) evidence pairs instead of
-    aggregated support (the streaming delta granularity)."""
-    if _is_slot_table(pred_rules, arg_slots):
-        return rejoin_nary(subrels, pred_rules, [s for _, s in arg_slots],
-                           canon_map, url_level)
-    return rejoin_triples(subrels, pred_rules, canon_map, url_level)
 
 
 def rejoin_nary(
@@ -285,12 +263,12 @@ def pairs_to_triples(
     canon_map: DataFrame | None = None,
     url_level: bool = False,
 ) -> DataFrame:
-    """Finish the FULLY-fused pipeline (graph.doc_kg_pairs): canonical
-    labels via broadcast map + skew-safe support counting. The fused UDF
+    """Finish the pipeline from graph.pairs_from_combined: canonical
+    labels via broadcast map + skew-safe support counting. The doc pass
     already emitted per-doc-distinct pairs, so the corpus-level distinct
     here only reconciles duplicates that canonicalization introduces (or
     none) — map-side partial aggregation makes it one light shuffle, the
-    pipeline's ONLY one."""
+    pipeline's ONLY one after the docs dedup."""
     pairs = pairs.select(
         "url", "subj_norm", F.col("pred"), "obj_norm"
     )

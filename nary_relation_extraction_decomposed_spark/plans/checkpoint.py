@@ -55,8 +55,10 @@ from pyspark.sql import SparkSession
 # different rule table), plus the fused pairs->triples checkpoint lane.
 # v4 = one stage graph for both runners: the default lane checkpoints
 # docs -> combined -> canon -> triples (the mentions/sentences/evidence/
-# subrels stages are gone; they are views of combined).
-ENGINE_VERSION = 4
+# subrels stages are gone; they are views of combined). v5 = combined also
+# carries the per-doc rejoin's triple pairs, so it depends on the rules, and
+# triples is the support aggregation over them (both lanes).
+ENGINE_VERSION = 5
 
 
 def fingerprint(*parts: str) -> str:

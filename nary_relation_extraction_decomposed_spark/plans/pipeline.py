@@ -6,20 +6,21 @@ pages(url, warc_ts, html, text, lang)
   -> dedup latest per url (max(struct(warc_ts, length, text)) per url,
      see textprep.dedup_latest_text)
   -> combined doc pass: mention detection + sentence analysis + per-doc
-     graph BFS + decomposition attributes in ONE mapInPandas (broadcast
-     gazetteer) — zero shuffles docs->evidence, since dedup leaves one row
-     per url; mentions/sentences/evidence/subrels are filter+project views
-     of it. Enriched graph: co-mention + token-window edges, default ON.
-  -> ER canonical map (MinHash-LSH + connected components)
-  -> rejoin into (subj, pred, obj) triples + support
+     graph BFS + decomposition + per-doc rejoin in ONE mapInPandas
+     (broadcast gazetteer and rules) — zero shuffles docs->triple pairs,
+     since dedup leaves one row per url; mentions/sentences/evidence/
+     subrels/pairs are filter+project views of it. Enriched graph:
+     co-mention + token-window edges, default ON.
+  -> ER canonical map (MinHash-LSH + connected components) over the
+     mention surfaces
+  -> canonical labels + support over the per-doc pairs
 
 Stage graph (stage: fingerprint parents; canon only with canonicalize):
 
-  default lane       docs: config -> combined: docs, gazetteer
-                     -> canon: combined -> triples: combined, canon, rules
-  fused_rejoin lane  docs: config -> pairs: docs, gazetteer, rules
-                     -> mentions: docs, gazetteer -> canon: mentions
-                     -> triples: pairs, canon
+  docs: config -> combined: docs, gazetteer, rules
+  -> canon: docs, gazetteer -> triples: combined, canon
+
+fused_rejoin only narrows the row kinds combined emits.
 
 run_pipeline builds the list in order; run_pipeline_checkpointed wraps
 every build in StageCheckpointer.run_stage (plans/checkpoint.py: per-stage
@@ -35,7 +36,7 @@ from functools import partial
 
 from pyspark.sql import DataFrame
 
-from ..operators import er, graph, mentions as M, textprep, triples as T
+from ..operators import er, graph, textprep, triples as T
 from ..operators.kernels import MAX_PATH_LEN, TOKEN_WINDOW
 
 
@@ -55,23 +56,17 @@ class PipelineConfig:
     # see operators/kernels.bfs_evidence
     co_mention_edges: bool = True
     token_window: int | None = TOKEN_WINDOW
-    # fuse decompose + rejoin + per-doc triple dedup into the doc
-    # mapInPandas as well (graph.doc_kg_pairs, whose per-doc rejoin is
-    # kernels.doc_pairs): the rejoin key (url, pivot_mid, pred) never
-    # leaves a document, so the subrel materialization and the corpus-wide
-    # self-join of the default lane are skipped, and the support
-    # aggregation is the only corpus-level exchange (13.2x fewer JVM
-    # bytes/doc, 2.35x wall — BENCH/BASELINE.md round 6). Trade-off: this lane
-    # never surfaces the sentences/evidence/subrels frames (None in the
-    # result), and canonicalizing pays a second detection pass
-    # (detect_mentions) for the canon map's corpus mention surfaces. Both
-    # rule-table schemas are accepted (triples.slot_rule_rows).
+    # triples-only doc pass: combined emits only the per-doc triple pairs
+    # (plus the mention rows canonicalizing reads) and skips mention-free
+    # docs before sentence analysis, so far fewer rows cross back into the
+    # JVM. Trade-off: the sentences/evidence/subrels frames are None in the
+    # result (mentions too without canonicalize).
     fused_rejoin: bool = False
     # latest-per-url dedup mode — the pipeline's ONLY corpus-wide
     # full-text shuffle:
     #   'latest' (default): always dedup (a crawl always has re-crawls);
     #   'skip':  caller asserts one row per url (a cleaned snapshot).
-    # doc_kg_combined/doc_kg_pairs require one row per url.
+    # doc_kg_combined requires one row per url.
     dedup_mode: str = "latest"
     # partitioning floor for Python-heavy stages (None -> 2x cores); see
     # operators/graph.py on why AQE byte-coalescing must not size these
@@ -88,13 +83,14 @@ class PipelineConfig:
 @dataclass
 class PipelineResult:
     docs: DataFrame
-    # views of the combined stage in the default lane; in the fused_rejoin
-    # lane sentences/evidence/subrels are None (the pairs UDF never
-    # surfaces them) and mentions is set only when canonicalize is on
+    # views of the combined stage; with fused_rejoin the doc pass emits
+    # no sentence/evidence rows (those views are None), and mentions is
+    # set only when canonicalize is on
     mentions: DataFrame | None
     sentences: DataFrame | None
     evidence: DataFrame | None
     subrels: DataFrame | None
+    pairs: DataFrame
     canon_map: DataFrame | None
     triples: DataFrame
     metrics: dict | None = None  # extraction accumulators (read after action)
@@ -117,14 +113,26 @@ class Stage:
     views: Callable[[DataFrame], dict] | None = None
 
 
-def _combined_views(combined: DataFrame) -> dict[str, DataFrame]:
-    ev = graph.evidence_from_combined(combined)
-    return {
-        "mentions": graph.mentions_from_combined(combined),
-        "sentences": graph.sentences_from_combined(combined),
-        "evidence": ev,
-        "subrels": T.subrels_from_evidence(ev),
-    }
+def _kinds(config: PipelineConfig) -> tuple[int, ...]:
+    """The row kinds the doc pass emits (see PipelineConfig.fused_rejoin)."""
+    if not config.fused_rejoin:
+        return graph.ALL_KINDS
+    return (graph.MENTION, graph.PAIR) if config.canonicalize else (graph.PAIR,)
+
+
+def _combined_views(kinds: tuple[int, ...]):
+    def views(combined: DataFrame) -> dict[str, DataFrame]:
+        out = {"pairs": graph.pairs_from_combined(combined)}
+        if graph.MENTION in kinds:
+            out["mentions"] = graph.mentions_from_combined(combined)
+        if graph.SENTENCE in kinds:
+            out["sentences"] = graph.sentences_from_combined(combined)
+        if graph.EVIDENCE in kinds:
+            out["evidence"] = graph.evidence_from_combined(combined)
+            out["subrels"] = T.subrels_from_evidence(out["evidence"])
+        return out
+
+    return views
 
 
 def _stages(
@@ -138,13 +146,7 @@ def _stages(
     width = config.python_parallelism or (
         pages.sparkSession.sparkContext.defaultParallelism * 2
     )
-    doc_args = (gazetteer, list(config.pred_vocab), config.pivot_type,
-                list(config.arg_slots))
-    graph_kw = dict(
-        max_path_len=config.max_path_len,
-        co_mention_edges=config.co_mention_edges,
-        token_window=config.token_window,
-    )
+    kinds = _kinds(config)
 
     def docs(_):
         # Extract FIRST (map-only, html never shuffles), THEN dedup latest
@@ -164,43 +166,32 @@ def _stages(
             return resolved
         return textprep.dedup_latest_text(resolved, num_partitions=width)
 
-    canon_parents: tuple[str, ...] = ("canon",) if config.canonicalize else ()
-    if config.fused_rejoin:
-        # triples-only fast lane (see PipelineConfig.fused_rejoin): ONE doc
-        # mapInPandas emits per-doc-distinct pairs; the support agg is the
-        # only corpus exchange
-        lane = [
-            Stage("pairs", lambda f: graph.doc_kg_pairs(
-                f["docs"], *doc_args, pred_rules, **graph_kw,
-            ), ("docs", "gazetteer", "rules")),
-        ]
-        if config.canonicalize:
-            lane.append(Stage(
-                "mentions", lambda f: M.detect_mentions(f["docs"], gazetteer),
-                ("docs", "gazetteer"),
-            ))
-        mentions_from = "mentions"
-        triples = Stage("triples", lambda f: T.pairs_to_triples(
-            f["pairs"], f.get("canon"),
-        ), ("pairs", *canon_parents))
-    else:
-        # ONE Python crossing and ZERO shuffles from docs to evidence;
+    stages = [
+        Stage("docs", docs, ("config",), persist=True),
+        # ONE Python crossing and ZERO shuffles from docs to triple pairs;
         # persisted in the plain runner because the views, ER and the
-        # rejoin all read it
-        lane = [
-            Stage("combined", lambda f: graph.doc_kg_combined(
-                f["docs"], *doc_args, **graph_kw,
-            ), ("docs", "gazetteer"), persist=True, views=_combined_views),
-        ]
-        mentions_from = "combined"
-        triples = Stage("triples", lambda f: T.rejoin(
-            f["subrels"], pred_rules, config.arg_slots, f.get("canon"),
-        ), ("combined", *canon_parents, "rules"))
+        # support aggregation all read it
+        Stage("combined", lambda f: graph.doc_kg_combined(
+            f["docs"], gazetteer, list(config.pred_vocab), config.pivot_type,
+            list(config.arg_slots), pred_rules,
+            max_path_len=config.max_path_len,
+            co_mention_edges=config.co_mention_edges,
+            token_window=config.token_window,
+            kinds=kinds,
+        ), ("docs", "gazetteer", "rules"), persist=True,
+            views=_combined_views(kinds)),
+    ]
+    canon = ("canon",) if config.canonicalize else ()
     if config.canonicalize:
-        lane.append(Stage("canon", lambda f: er.canonical_map(
+        # the mention rows depend on docs and gazetteer alone, so a rules
+        # edit keeps the canonical map
+        stages.append(Stage("canon", lambda f: er.canonical_map(
             f["mentions"].select("surface_norm")
-        ), (mentions_from,)))
-    return [Stage("docs", docs, ("config",), persist=True), *lane, triples]
+        ), ("docs", "gazetteer")))
+    stages.append(Stage("triples", lambda f: T.pairs_to_triples(
+        f["pairs"], f.get("canon"),
+    ), ("combined", *canon)))
+    return stages
 
 
 def _add(frames: dict, stage: Stage, df: DataFrame) -> None:
@@ -216,6 +207,7 @@ def _result(frames: dict, metrics: dict | None) -> PipelineResult:
         sentences=frames.get("sentences"),
         evidence=frames.get("evidence"),
         subrels=frames.get("subrels"),
+        pairs=frames["pairs"],
         canon_map=frames.get("canon"),
         triples=frames["triples"],
         metrics=metrics,

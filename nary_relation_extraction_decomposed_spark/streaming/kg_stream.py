@@ -80,8 +80,9 @@ def stream_pages_to_triples(
         )
     if url_level and config.fused_rejoin:
         raise ValueError(
-            "url_level deltas read the subrels and mentions frames, which "
-            "the fused_rejoin lane does not surface; use fused_rejoin=False"
+            "url_level deltas write a mention-surfaces sidecar, and the "
+            "fused_rejoin doc pass emits no mention rows without "
+            "canonicalize; use fused_rejoin=False"
         )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -89,8 +90,7 @@ def stream_pages_to_triples(
             return
         res = run_pipeline(batch_df, gazetteer, pred_rules, config)
         if url_level:
-            out = T.rejoin(res.subrels, pred_rules, config.arg_slots,
-                           url_level=True)
+            out = T.pairs_to_triples(res.pairs, url_level=True)
             # processed-urls manifest (1 row per url per batch): a re-crawl
             # whose new version yields NO triples leaves no trace in the
             # delta table itself, so without this the merge could not know

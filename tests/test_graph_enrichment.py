@@ -133,11 +133,12 @@ def test_combined_pass_equals_staged_operators(spark, fixture_dir):
     pages = spark.read.parquet(os.path.join(fixture_dir, "pages.parquet"))
     pages = pages.filter(F.xxhash64("url") % 8 == 0)
     gaz = spark.read.parquet(os.path.join(fixture_dir, "gazetteer.parquet"))
+    rules = spark.read.parquet(os.path.join(fixture_dir, "pred_rules.parquet"))
     docs = dedup_latest_text(resolve_text(filter_pages(pages, "en")))
     slots = [("GENE", "a"), ("VARIANT", "b")]
     vocab = ["inhibits", "activates", "binds", "modulates"]
 
-    combined = doc_kg_combined(docs, gaz, vocab, "DRUG", slots)
+    combined = doc_kg_combined(docs, gaz, vocab, "DRUG", slots, rules)
 
     ments = detect_mentions(docs, gaz)
     assert {tuple(r) for r in mentions_from_combined(combined).collect()} == {
@@ -153,14 +154,61 @@ def test_combined_pass_equals_staged_operators(spark, fixture_dir):
     assert a == b and len(a) > 100
 
 
+def test_pair_rows_leave_other_rows_unchanged(spark, fixture_dir):
+    """The per-doc rejoin only ADDS pair rows to the doc pass: its
+    sentence, mention and evidence rows are identical under the fixture's
+    binary rules and under an empty slot table (which yields no pairs).
+    And the fused_rejoin doc pass (pair + mention rows only) gives the
+    default lane's canonical map and triples."""
+    from nary_relation_extraction_decomposed_spark.operators.graph import (
+        PAIR,
+        doc_kg_combined,
+    )
+    from nary_relation_extraction_decomposed_spark.operators.textprep import (
+        dedup_latest_text,
+        filter_pages,
+        resolve_text,
+    )
+
+    pages = spark.read.parquet(os.path.join(fixture_dir, "pages.parquet"))
+    pages = pages.filter(F.xxhash64("url") % 8 == 0)
+    gaz = spark.read.parquet(os.path.join(fixture_dir, "gazetteer.parquet"))
+    rules = spark.read.parquet(os.path.join(fixture_dir, "pred_rules.parquet"))
+    no_rules = spark.createDataFrame(
+        [], "slot string, pred string, pred_out string"
+    )
+    docs = dedup_latest_text(resolve_text(filter_pages(pages, "en")))
+    slots = [("GENE", "a"), ("VARIANT", "b")]
+    vocab = ["inhibits", "activates", "binds", "modulates"]
+
+    with_rules = doc_kg_combined(docs, gaz, vocab, "DRUG", slots, rules)
+    without = doc_kg_combined(docs, gaz, vocab, "DRUG", slots, no_rules)
+    assert with_rules.filter(F.col("kind") == PAIR).count() > 100
+    assert without.filter(F.col("kind") == PAIR).count() == 0
+    others = F.col("kind") != PAIR
+    a = _hrows(with_rules.filter(others))
+    assert a == _hrows(without.filter(others))
+    assert {r[1] for r in a} == {0, 1, 2}
+
+    def run(**kw):
+        res = run_pipeline(pages, gaz, rules, PipelineConfig(**kw))
+        return ({tuple(r) for r in res.canon_map.collect()},
+                {tuple(r) for r in res.triples.collect()})
+
+    canon, triples = run()
+    assert triples
+    assert run(fused_rejoin=True) == (canon, triples)
+
+
 def test_doc_passes_accept_batches_without_output(spark):
     """A batch whose documents yield no rows (empty or NULL text, no
     mentions) must produce an empty result, not an Arrow conversion error
     on the array columns of an empty output frame."""
     from nary_relation_extraction_decomposed_spark.operators.graph import (
+        PAIR,
         doc_graph_subrels,
         doc_kg_combined,
-        doc_kg_pairs,
+        pairs_from_combined,
     )
     from nary_relation_extraction_decomposed_spark.operators.mentions import (
         analyze_sentences,
@@ -179,11 +227,14 @@ def test_doc_passes_accept_batches_without_output(spark):
         [("u1", ""), ("u2", None), ("u3", "no entities here")],
         "url string, text string",
     ).coalesce(1)
-    combined = doc_kg_combined(docs, gaz, ["links"], "PIV", slots)
+    combined = doc_kg_combined(docs, gaz, ["links"], "PIV", slots, rules)
     assert combined.filter("kind = 2").count() == 0
-    assert doc_kg_pairs(docs, gaz, ["links"], "PIV", slots, rules).count() == 0
+    assert pairs_from_combined(combined).count() == 0
+    assert doc_kg_combined(docs, gaz, ["links"], "PIV", slots, rules,
+                           kinds=(PAIR,)).count() == 0
     empty = docs.filter("url = 'u1'")
-    assert doc_kg_combined(empty, gaz, ["links"], "PIV", slots).count() == 0
+    assert doc_kg_combined(empty, gaz, ["links"], "PIV", slots,
+                           rules).count() == 0
     assert analyze_sentences(empty, ["links"]).count() == 0
     mentionless = doc_graph_subrels(
         detect_mentions(docs, gaz), analyze_sentences(docs, ["links"]),
@@ -193,14 +244,14 @@ def test_doc_passes_accept_batches_without_output(spark):
 
 
 def test_pairs_fusion_equals_staged(spark, fixture_dir):
-    """doc_kg_pairs (detection+BFS+decompose+PER-DOC REJOIN in one
-    mapInPandas, VERDICT r5 #1) must reproduce the staged
-    combined->evidence->subrels->rejoin_triples chain exactly: same
+    """The pair rows of doc_kg_combined (detection+BFS+decompose+PER-DOC
+    REJOIN in one mapInPandas, VERDICT r5 #1) must reproduce the Spark
+    rejoin_triples over the subrels of the same frame exactly: same
     url-level distinct pairs, same final (subj, pred, obj, support)."""
     from nary_relation_extraction_decomposed_spark.operators.graph import (
         doc_kg_combined,
-        doc_kg_pairs,
         evidence_from_combined,
+        pairs_from_combined,
     )
     from nary_relation_extraction_decomposed_spark.operators.textprep import (
         dedup_latest_text,
@@ -221,9 +272,12 @@ def test_pairs_fusion_equals_staged(spark, fixture_dir):
     slots = [("GENE", "a"), ("VARIANT", "b")]
     vocab = ["inhibits", "activates", "binds", "modulates"]
 
-    staged_sr = subrels_from_evidence(evidence_from_combined(
-        doc_kg_combined(docs, gaz, vocab, "DRUG", slots)))
-    pairs = doc_kg_pairs(docs, gaz, vocab, "DRUG", slots, rules)
+    def combined_with(rules):
+        combined = doc_kg_combined(docs, gaz, vocab, "DRUG", slots, rules)
+        return (subrels_from_evidence(evidence_from_combined(combined)),
+                pairs_from_combined(combined))
+
+    staged_sr, pairs = combined_with(rules)
 
     staged_urls = rejoin_triples(staged_sr, rules, url_level=True)
     fused_urls = pairs_to_triples(pairs, url_level=True)
@@ -244,9 +298,9 @@ def test_pairs_fusion_equals_staged(spark, fixture_dir):
         F.concat(F.col("pred_b"), F.lit("_alt")).alias("pred_b"),
     )
     rules_dup = rules.unionByName(extra)
-    pairs_dup = doc_kg_pairs(docs, gaz, vocab, "DRUG", slots, rules_dup)
+    staged_sr_dup, pairs_dup = combined_with(rules_dup)
     want_dup = {tuple(r)
-                for r in rejoin_triples(staged_sr, rules_dup).collect()}
+                for r in rejoin_triples(staged_sr_dup, rules_dup).collect()}
     got_dup = {tuple(r) for r in pairs_to_triples(pairs_dup).collect()}
     assert got_dup == want_dup and len(want_dup) > len(want)
 
@@ -254,7 +308,8 @@ def test_pairs_fusion_equals_staged(spark, fixture_dir):
 def test_fused_pipeline_equals_unfused(spark, fixture_dir):
     """run_pipeline's combined default == the staged operator chain
     (detect_mentions -> analyze_sentences -> doc_graph_subrels ->
-    subrels_from_evidence -> rejoin) end to end (triples with support)."""
+    subrels_from_evidence -> rejoin_triples) end to end (triples with
+    support)."""
     from nary_relation_extraction_decomposed_spark.operators.graph import (
         doc_graph_subrels,
     )
@@ -268,7 +323,7 @@ def test_fused_pipeline_equals_unfused(spark, fixture_dir):
         resolve_text,
     )
     from nary_relation_extraction_decomposed_spark.operators.triples import (
-        rejoin,
+        rejoin_triples,
         subrels_from_evidence,
     )
 
@@ -291,13 +346,13 @@ def test_fused_pipeline_equals_unfused(spark, fixture_dir):
         analyze_sentences(docs, list(cfg.pred_vocab)),
         cfg.pivot_type, list(cfg.arg_slots),
     )
-    staged = rows(rejoin(subrels_from_evidence(ev), rules, cfg.arg_slots))
+    staged = rows(rejoin_triples(subrels_from_evidence(ev), rules))
 
     want = triples()
     assert want == staged and want
-    # round 6: the production fused_rejoin lane (doc_kg_pairs inside
-    # run_pipeline — the configuration the bench headline measures) must
-    # produce the identical triples, with and without merge-time ER
+    # the fused_rejoin doc pass (pair rows only — the configuration the
+    # bench headline measures) must produce the identical triples, with
+    # and without merge-time ER
     assert want == triples(fused_rejoin=True)
     assert triples(canonicalize=True) == triples(
         fused_rejoin=True, canonicalize=True
@@ -363,8 +418,8 @@ def test_pairs_fusion_equals_staged_random_corpora(spark):
 
     from nary_relation_extraction_decomposed_spark.operators.graph import (
         doc_kg_combined,
-        doc_kg_pairs,
         evidence_from_combined,
+        pairs_from_combined,
     )
     from nary_relation_extraction_decomposed_spark.operators.triples import (
         pairs_to_triples,
@@ -422,9 +477,9 @@ def test_pairs_fusion_equals_staged_random_corpora(spark):
                 "pred_a string, pred_b string",
             )
 
-        sr = subrels_from_evidence(evidence_from_combined(
-            doc_kg_combined(docs, gaz, vocab, "PIV", slots)))
-        pairs = doc_kg_pairs(docs, gaz, vocab, "PIV", slots, rules)
+        combined = doc_kg_combined(docs, gaz, vocab, "PIV", slots, rules)
+        sr = subrels_from_evidence(evidence_from_combined(combined))
+        pairs = pairs_from_combined(combined)
         if nary:
             labels = [s for _, s in slots]
             staged_u = rejoin_nary(sr, rules, labels, None, True)

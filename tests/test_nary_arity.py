@@ -122,6 +122,7 @@ def test_binary_rules_fire_only_on_matching_pred_pairs(spark):
     import dataclasses
 
     from nary_relation_extraction_decomposed_spark.operators.triples import (
+        rejoin_triples,
         slot_rule_rows,
     )
 
@@ -153,6 +154,10 @@ def test_binary_rules_fire_only_on_matching_pred_pairs(spark):
             for r in res.triples.collect()
         }
         assert got == want, fused
+        if not fused:
+            # the Spark reference over the same run's subrels agrees
+            assert {tuple(r) for r in rejoin_triples(
+                res.subrels, rules).collect()} == want
 
 
 def test_incremental_new_triples(spark):
@@ -206,11 +211,15 @@ def test_slot_rules_work_for_3ary_too(spark):
 
 
 def test_4ary_fused_rejoin_equals_staged(spark):
-    """Round 6: the fused per-doc rejoin (doc_kg_pairs nary dispatch via
-    PipelineConfig.fused_rejoin) must reproduce the staged rejoin_nary
-    chain exactly at arity 4 — including a duplicate (slot, pred) rule
-    table, where every rule row emits."""
+    """The per-doc rejoin, in both doc-pass shapes (default and
+    PipelineConfig.fused_rejoin), must reproduce the Spark rejoin_nary
+    over the default run's subrels exactly at arity 4 — including a
+    duplicate (slot, pred) rule table, where every rule row emits."""
     import dataclasses
+
+    from nary_relation_extraction_decomposed_spark.operators.triples import (
+        rejoin_nary,
+    )
 
     pages = _pages(spark, [
         ("u1", "alpha beta gamma delta links"),
@@ -222,28 +231,37 @@ def test_4ary_fused_rejoin_equals_staged(spark):
     ])
     cfg_fused = dataclasses.replace(CFG_4ARY, fused_rejoin=True)
 
-    def triples(rules, cfg):
-        res = run_pipeline(pages, _gaz(spark), rules, cfg)
+    def rows(df):
         return {
             (r["subj"], r["pred"], r["obj"], r["support"])
-            for r in res.triples.collect()
+            for r in df.collect()
         }
 
+    def triples(rules, cfg):
+        return rows(run_pipeline(pages, _gaz(spark), rules, cfg).triples)
+
+    def spark_rejoin(rules):
+        res = run_pipeline(pages, _gaz(spark), rules, CFG_4ARY)
+        return rows(rejoin_nary(res.subrels, rules, ["a", "b", "c"]))
+
     rules = _slot_rules(spark)
-    want = triples(rules, CFG_4ARY)
-    assert triples(rules, cfg_fused) == want and want
+    want = spark_rejoin(rules)
+    assert triples(rules, CFG_4ARY) == want and want
+    assert triples(rules, cfg_fused) == want
 
     rules_dup = rules.unionByName(spark.createDataFrame(
         [("a", "links", "links.a2")],
         "slot string, pred string, pred_out string",
     ))
-    want_dup = triples(rules_dup, CFG_4ARY)
+    want_dup = spark_rejoin(rules_dup)
+    assert triples(rules_dup, CFG_4ARY) == want_dup
     assert triples(rules_dup, cfg_fused) == want_dup
     assert len(want_dup) > len(want)
 
     # an EMPTY nary rule table keeps nary semantics (zero triples) in both
-    # lanes — the fused path dispatches on the schema, not the first row
-    # (review r6 cont.: it used to fall into the binary branch and raise)
+    # doc-pass shapes — slot_rule_rows dispatches on the schema, not the
+    # first row (review r6 cont.: it used to fall into the binary branch
+    # and raise)
     rules_empty = rules.filter("pred = 'nonexistent'")
     assert triples(rules_empty, CFG_4ARY) == set()
     assert triples(rules_empty, cfg_fused) == set()

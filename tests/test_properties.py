@@ -83,9 +83,11 @@ def test_kill_resume(spark, inputs, tmp_path):
 def test_aux_input_change_invalidates_suffix(spark, inputs, tmp_path):
     """v3 fingerprints: the gazetteer and rule-table CONTENT chain into
     the stages that consume them. Editing the rule table and rerunning
-    against the same checkpoint root must rebuild EXACTLY the triples
-    stage (not replay stale triples — the pre-v3 bug); editing the
-    gazetteer must rebuild the combined suffix but still skip docs."""
+    against the same checkpoint root must rebuild EXACTLY combined (whose
+    pair rows apply the rules) and triples — not replay stale triples, the
+    pre-v3 bug — and skip docs and canon (mentions ignore the rules);
+    editing the gazetteer must rebuild the combined suffix but still skip
+    docs."""
     pages, gaz, rules = inputs
     pages = pages.filter(F.xxhash64("url") % 8 == 0)
     root = str(tmp_path / "ckpt")
@@ -94,14 +96,16 @@ def test_aux_input_change_invalidates_suffix(spark, inputs, tmp_path):
     r1, ck1 = run_pipeline_checkpointed(pages, gaz, rules, cfg, root, "c1")
     t1 = _triples_set(r1.triples)
 
-    # rules edit -> ONLY triples rebuilds, and the output tracks the edit
+    # rules edit -> ONLY combined + triples rebuild, and the output tracks
+    # the edit
     rules2 = rules.withColumn(
         "pred_a", F.concat(F.col("pred_a"), F.lit("_v2"))
     )
     r2, ck2 = run_pipeline_checkpointed(pages, gaz, rules2, cfg, root, "c1")
-    assert ck2.stats["docs"]["skipped"]
-    assert ck2.stats["combined"]["skipped"]
-    assert not ck2.stats["triples"]["skipped"]
+    assert {s for s, st in ck2.stats.items() if st["skipped"]} == {
+        "docs", "canon"}
+    assert {s for s, st in ck2.stats.items() if not st["skipped"]} == {
+        "combined", "triples"}
     t2 = _triples_set(r2.triples)
     assert t2 != t1
     assert not any(p.endswith("_v2") for _, p, _, _ in t1)
@@ -116,9 +120,10 @@ def test_aux_input_change_invalidates_suffix(spark, inputs, tmp_path):
 
 
 def test_fused_rejoin_checkpoint_resume(spark, inputs, tmp_path):
-    """The fused_rejoin lane (docs -> pairs -> mentions -> canon ->
-    triples) is checkpoint-resumable and triple-identical to both the
-    default checkpointed lane and the non-checkpointed fused pipeline."""
+    """The fused_rejoin doc pass runs the same stages as the default lane
+    (docs -> combined -> canon -> triples; no second detection pass), is
+    checkpoint-resumable and triple-identical to both the default
+    checkpointed lane and the non-checkpointed fused pipeline."""
     import dataclasses
 
     pages, gaz, rules = inputs
@@ -135,7 +140,7 @@ def test_fused_rejoin_checkpoint_resume(spark, inputs, tmp_path):
 
     r1, ck1 = run_pipeline_checkpointed(pages, gaz, rules, cfg, root, "c1")
     assert _triples_set(r1.triples) == want
-    assert set(ck1.stats) == {"docs", "pairs", "mentions", "canon", "triples"}
+    assert set(ck1.stats) == {"docs", "combined", "canon", "triples"}
     assert all(not st["skipped"] for st in ck1.stats.values())
 
     # full rerun skips every stage and reproduces the output exactly
@@ -143,21 +148,20 @@ def test_fused_rejoin_checkpoint_resume(spark, inputs, tmp_path):
     assert all(st["skipped"] for st in ck2.stats.values())
     assert _triples_set(r2.triples) == want
 
-    # kill between pairs and triples -> resume rebuilds only the tail
+    # kill between combined and triples -> resume rebuilds only the tail
     shutil.rmtree(os.path.join(root, "triples"))
     r3, ck3 = run_pipeline_checkpointed(pages, gaz, rules, cfg, root, "c1")
-    assert ck3.stats["pairs"]["skipped"] and ck3.stats["canon"]["skipped"]
+    assert ck3.stats["combined"]["skipped"] and ck3.stats["canon"]["skipped"]
     assert not ck3.stats["triples"]["skipped"]
     assert _triples_set(r3.triples) == want
 
-    # rules edit -> pairs + triples rebuild; docs/mentions/canon skip
+    # rules edit -> combined + triples rebuild; docs/canon skip
     rules2 = rules.withColumn(
         "pred_a", F.concat(F.col("pred_a"), F.lit("_v2"))
     )
     _, ck4 = run_pipeline_checkpointed(pages, gaz, rules2, cfg, root, "c1")
-    assert ck4.stats["docs"]["skipped"] and ck4.stats["mentions"]["skipped"]
-    assert ck4.stats["canon"]["skipped"]
-    assert not ck4.stats["pairs"]["skipped"]
+    assert ck4.stats["docs"]["skipped"] and ck4.stats["canon"]["skipped"]
+    assert not ck4.stats["combined"]["skipped"]
     assert not ck4.stats["triples"]["skipped"]
 
 

@@ -20,8 +20,8 @@ def test_streaming_rejects_per_batch_canonicalize(spark, fixture_dir, tmp_path):
     """Per-micro-batch canonical maps break delta additivity (labels are the
     min of that BATCH's cluster, not the union's) — the entry point must
     refuse rather than silently emit non-additive deltas. Likewise
-    url_level deltas need the subrels/mentions frames, which the
-    fused_rejoin lane never builds."""
+    url_level deltas write a mention-surfaces sidecar, and the
+    fused_rejoin doc pass emits no mention rows without canonicalize."""
     import pytest
 
     with pytest.raises(ValueError, match="canonicalize"):

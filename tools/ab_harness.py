@@ -1,8 +1,7 @@
 """Generic same-window interleaved A/B harness (VERDICT r5 #4).
 
-Generalizes tools/er_canon_ab.py's method — the committed pattern that
-pinned the r4 er_canon regression as window-caused — to ANY bench entry
-and ANY env-switched variant pair:
+The same-window A/B method that pinned the r4 er_canon regression as
+window-caused, for ANY bench entry and ANY env-switched variant pair:
 
   A/B/A/B... interleaved draws inside ONE Spark session, per-draw
   /proc/stat steal, bench.py's cache+GC reset between draws, and
@@ -43,9 +42,21 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
-# ONE parser for bandwidth_probe.py output across the A/B tools — a format
-# change must not desync two copies (review r6)
-from tools.er_canon_ab import probe  # noqa: E402
+def probe() -> dict:
+    """Run tools/bandwidth_probe.py and parse its per-process-count
+    bandwidth and 4->16 process efficiency lines."""
+    out = subprocess.run(
+        [sys.executable, os.path.join(os.path.dirname(__file__), "bandwidth_probe.py")],
+        capture_output=True, text=True, timeout=600,
+    ).stdout
+    res = {}
+    for line in out.splitlines():
+        if line.startswith("procs="):
+            procs = int(line.split("=")[1].split()[0])
+            res[f"gbps_{procs}p"] = float(line.split("~")[1].split()[0])
+        elif "efficiency" in line:
+            res["bw_eff_4to16"] = float(line.rsplit(":", 1)[1])
+    return res
 
 
 def _parse_env(kvs: list[str]) -> dict:

@@ -176,8 +176,8 @@ def pipeline_plan_evidence(spark) -> str:
         "\n## Full kg pipeline (triples) — end-to-end physical plan\n\n"
         "*filter->extract(mapInPandas)->dedup(max(struct) aggregate on ONE "
         "url shuffle)->combined doc pass(ONE mapInPandas: detection + "
-        "sentences + graph BFS, no shuffle)->rejoin(SMJ on checkpointed "
-        "subrels)->broadcast rules->distinct+count support.*\n\n"
+        "sentences + graph BFS + per-doc rejoin, no shuffle)->pair rows->"
+        "distinct+count support.*\n\n"
         f"```\n{buf.getvalue().strip()}\n```\n"
     )
 

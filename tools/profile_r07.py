@@ -182,9 +182,9 @@ def profile_kg(spark):
     )
     docs_p = docs.persist()
     docs_p.count()
-    pairs = graph.doc_kg_pairs(
+    pairs = graph.doc_kg_combined(
         docs_p, _gaz_df(spark), list(PRED_WORDS), "PIV",
-        [("ARGA", "a"), ("ARGB", "b")], rules,
+        [("ARGA", "a"), ("ARGB", "b")], rules, kinds=(graph.PAIR,),
     )
     timed(spark, "kg.pairs_noop(warm docs)", lambda: noop(pairs))
     docs_p.unpersist()
