@@ -33,6 +33,12 @@ def minhash_signature_col(shingle_arr: Column, num_perms: int = MINHASH_PERMS) -
 
     'Permutation' i is the seeded hash family xxhash64(shingle, seed=i);
     signature[i] = min over shingles. Deterministic across runs/clusters.
+
+    Spec twin: the engine computes the same values with the codegen'd
+    explode + min() aggregation (operators/dedup.minhash_agg, run by
+    er.minhash_signatures and dedup.minhash_signatures_wide); this
+    interpreted form defines them, backs the `minhash_sig` oracle query,
+    and the tests pin the engine to it value for value.
     """
     return F.transform(
         F.sequence(F.lit(0), F.lit(num_perms - 1)),
@@ -43,7 +49,14 @@ def minhash_signature_col(shingle_arr: Column, num_perms: int = MINHASH_PERMS) -
 def lsh_band_hashes_col(signature: Column, bands: int = LSH_BANDS, rows: int = LSH_ROWS) -> Column:
     """Split a MinHash signature into `bands` bands of `rows` values and hash
     each band -> array<struct<band:int, bucket:bigint>>. Explode downstream;
-    mentions/docs sharing any (band, bucket) are LSH candidates."""
+    mentions/docs sharing any (band, bucket) are LSH candidates.
+
+    Spec twin: the engine's banding (operators/dedup.minhash_pairs_from_sigs,
+    also behind er.lsh_candidate_pairs) hashes the band's values passed as
+    columns, xxhash64(h_i, .., h_j), which folds through the same seed
+    chain as xxhash64 over this array slice, so the buckets are equal. This
+    form backs the `lsh_blocks` oracle query, and the tests pin the
+    engine's candidate pairs to it."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
         lambda b: F.struct(

@@ -60,10 +60,18 @@ def compact_form_col(c: Column) -> Column:
 def shingles_col(c: Column, k: int = SHINGLE_K) -> Column:
     """Distinct sorted k-shingles of '^'+compact+'$' as array<string> —
     pure Spark SQL higher-order functions, no UDF."""
-    padded = F.concat(F.lit("^"), compact_form_col(c), F.lit("$"))
-    n = F.greatest(F.length(padded) - (k - 1), F.lit(1))
-    return F.array_sort(
-        F.array_distinct(
-            F.transform(F.sequence(F.lit(1), n), lambda i: F.substr(padded, i, F.lit(k)))
+
+    def grams(padded: Column) -> Column:
+        n = F.greatest(F.length(padded) - (k - 1), F.lit(1))
+        return F.transform(
+            F.sequence(F.lit(1), n), lambda i: F.substr(padded, i, F.lit(k))
         )
-    )
+
+    # lambdas run interpreted, without subexpression elimination: a lambda
+    # that referenced the padded column itself would rerun its regexes once
+    # per shingle. Binding it once as the variable of an outer one-element
+    # transform keeps the column at one normalization per string.
+    padded = F.concat(F.lit("^"), compact_form_col(c), F.lit("$"))
+    return F.array_sort(F.array_distinct(
+        F.element_at(F.transform(F.array(padded), grams), 1)
+    ))

@@ -6,11 +6,17 @@ Scale design:
   survivor is min(id) — deterministic, resume-safe.
 - ngram_jaccard_pairs: blocked self-join (never all-pairs); block key is
   caller-chosen (lang/source/domain); intersect/union are JVM array ops.
-- minhash_dup_candidates: LSH banding (reuses the ER machinery) — the 100 TB
-  path: candidate generation is linear in docs x bands, the quadratic step
-  only happens inside same-bucket groups, capped by MAX_BLOCK_SIZE.
+- minhash_dup_candidates: MinHash (minhash_agg) + LSH banding
+  (minhash_pairs_from_sigs) — the 100 TB path: candidate generation is
+  linear in docs x bands, the quadratic step only happens inside
+  same-bucket groups, capped by MAX_BLOCK_SIZE. This is the one
+  MinHash-LSH path of the engine: curation's near-dup stage and ER
+  (operators/er.py, keyed by the surface string over char shingles) run
+  the same signature aggregation and the same banding and pair code.
 - simhash_signatures: token hashes via xxhash64 (JVM), 64-bit sign-fold via
   pure higher-order SQL — no Python in the loop.
+- every pair generator expands its buckets through ONE capped in-bucket
+  pair expansion (_bucket_pairs).
 """
 
 from __future__ import annotations
@@ -18,8 +24,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from .er import MAX_BLOCK_SIZE
-
+MAX_BLOCK_SIZE = 64  # over-cap LSH buckets truncate to this many members
 TOKEN_RE = "[a-z0-9]+"
 
 
@@ -80,22 +85,31 @@ def ngram_jaccard_pairs(
     )
 
 
+def minhash_agg(
+    df: DataFrame, key: Column, grams: Column, num_perms: int = 64
+) -> DataFrame:
+    """(key, h0..h{num_perms-1}): signature[i] = min over the row's grams
+    of xxhash64(g, i), one row per key (one shuffle on the key).
+
+    The higher-order-function formulation (array_min(transform(...)), the
+    spec twin in functions/hashing.py) is interpreted, not
+    codegen'd — at doc scale (100s of shingles x 64 perms) it is ~50x
+    slower. explode + groupBy keeps every hash and min inside whole-stage
+    codegen; partial aggregation makes the shuffle tiny (num_perms longs
+    per key). Values are bit-identical to the spec twin's."""
+    exploded = df.select(key, F.explode(grams).alias("g"))
+    aggs = [F.min(F.xxhash64("g", F.lit(i))).alias(f"h{i}") for i in range(num_perms)]
+    return exploded.groupBy(exploded.columns[0]).agg(*aggs)
+
+
 def minhash_signatures_wide(
     df: DataFrame, id_col: str, text: Column, shingle_n: int,
     num_perms: int = 64,
 ) -> DataFrame:
-    """MinHash via explode + 64 min() aggregates (one shuffle on id).
-
-    The higher-order-function formulation (array_min(transform(...))) is
-    interpreted, not codegen'd — at doc scale (100s of shingles x 64 perms)
-    it is ~50x slower. explode + groupBy keeps every hash and min inside
-    whole-stage codegen; partial aggregation makes the shuffle tiny
-    (64 longs per doc)."""
-    grams = df.select(
-        F.col(id_col).alias("id"), F.explode(word_ngrams_col(text, shingle_n)).alias("g")
+    """(id, h0..h{num_perms-1}): MinHash over the word shingle_n-grams."""
+    return minhash_agg(
+        df, F.col(id_col).alias("id"), word_ngrams_col(text, shingle_n), num_perms
     )
-    aggs = [F.min(F.xxhash64("g", F.lit(i))).alias(f"h{i}") for i in range(num_perms)]
-    return grams.groupBy("id").agg(*aggs)
 
 
 def minhash_dup_candidates(
@@ -116,32 +130,46 @@ def minhash_pairs_from_sigs(
     cross-engine oracle: on a committed signature fixture the bucket hash
     equality xxhash64(h_i..h_j) == xxhash64(h_i'..h_j') reduces to tuple
     equality of the band values, which DuckDB can group on directly
-    (plans/q_text.py dedup_minhash_pairs)."""
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("int").alias("band"),
-                F.xxhash64(*[F.col(f"h{b * rows + r}") for r in range(rows)]).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
+    (plans/q_text.py dedup_minhash_pairs). Buckets expand through the
+    capped _bucket_pairs (skew guard there). ER runs this too, with the
+    surface string as the id (er.lsh_candidate_pairs)."""
+    # one SQL expression, not bands x (rows + 5) Column objects: each
+    # Column costs a Py4J round trip, which put ~0.15 s of driver time on
+    # every call (4-core host)
+    band_structs = ", ".join(
+        f"named_struct('band', {b}, 'bucket', "
+        f"xxhash64({', '.join(f'h{b * rows + r}' for r in range(rows))}))"
+        for b in range(bands)
     )
-    # ONE shuffle: groupBy (band, bucket) -> collect_list -> in-array pair
-    # expansion; the earlier sizes-join + self-join referenced the banded
-    # rows 3x, recomputing the 64-agg MinHash upstream per reference.
-    # Over-cap buckets TRUNCATE to their first MAX_BLOCK_SIZE sorted
-    # members (the LSH skew guard, same shape as simhash_near_pairs): a
-    # cluster of > MAX_BLOCK_SIZE byte-identical docs has identical
-    # signatures in EVERY band, so an outright drop would emit zero pairs
-    # for exactly the most-duplicated content — the deterministic sample
-    # keeps it discoverable at bounded quadratic cost (full coverage of
-    # byte-identical content is exact_dedup's job; run it first).
-    bands_df = sigs.select("id", F.explode(band_structs).alias("bb")).select(
-        "id", "bb.band", "bb.bucket"
+    bands_df = sigs.selectExpr("id", f"inline(array({band_structs}))")
+    return (
+        _bucket_pairs(bands_df, F.col("id"))
+        .select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
+        .distinct()
     )
+
+
+def _bucket_pairs(banded: DataFrame, member: Column) -> DataFrame:
+    """(band, bucket, ...) rows -> (a, b): every pair of `member` values
+    sharing a (band, bucket), a before b in sort order; duplicates across
+    bands remain (callers dedup after their own projection).
+
+    ONE shuffle: groupBy (band, bucket) -> collect_list -> in-array pair
+    expansion; the earlier sizes-join + self-join referenced the banded
+    rows 3x, recomputing the upstream signatures per reference.
+
+    Skew guard: over-cap buckets TRUNCATE to their first MAX_BLOCK_SIZE
+    sorted members (array_sort makes the sample deterministic), not drop.
+    A cluster of > MAX_BLOCK_SIZE identical items (byte-identical docs,
+    boilerplate titles, simhash=0 from empty pages — guaranteed at web
+    scale) collides in EVERY band, so an outright drop would emit zero
+    pairs for exactly the most-duplicated content. The sample keeps it
+    discoverable at bounded quadratic cost (connected components over the
+    pairs still merges it); full coverage of byte-identical content is
+    exact_dedup's job — run it first."""
     buckets = (
-        bands_df.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("id")).alias("members"))
+        banded.groupBy("band", "bucket")
+        .agg(F.array_sort(F.collect_list(member)).alias("members"))
         .filter(F.size("members") >= 2)
         .withColumn("members", F.slice("members", 1, MAX_BLOCK_SIZE))
     )
@@ -150,15 +178,11 @@ def minhash_pairs_from_sigs(
             F.col("members"),
             lambda x, i: F.transform(
                 F.slice(F.col("members"), i + F.lit(2), F.size("members")),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
+                lambda y: F.struct(x.alias("a"), y.alias("b")),
             ),
         )
     )
-    return (
-        buckets.select(F.explode(pair_arr).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
+    return buckets.select(F.explode(pair_arr).alias("p")).select("p.a", "p.b")
 
 
 def simhash_signatures(df: DataFrame, id_col: str, text: Column) -> DataFrame:
@@ -206,19 +230,9 @@ def simhash_near_pairs(
     explicitly trades recall (wider bands may miss pairs beyond the
     64//band_bits - 1 guarantee) against candidate fan-out.
 
-    Skew guard: same shape as every other pair generator here (ONE groupBy
-    on (band, key) -> size-capped member array -> in-array pair expansion).
-    A degenerate hot band — simhash=0 from empty/boilerplate docs is
-    GUARANTEED at web scale — previously equi-joined quadratically onto one
-    reducer. Buckets larger than MAX_BLOCK_SIZE are TRUNCATED to their
-    first MAX_BLOCK_SIZE members (array_sort makes the sample
-    deterministic: smallest (id, simhash) survive), not dropped: a cluster
-    of > MAX_BLOCK_SIZE documents with IDENTICAL simhash is over-cap in
-    every band, so a drop would silently yield zero pairs for exactly the
-    most-duplicated content. Truncation keeps such clusters discoverable
-    (the sampled members pair; connected components over the pairs still
-    merges them) at bounded cost; full within-cluster coverage for
-    byte-identical content is exact_dedup's job — run it first."""
+    Buckets expand through the capped _bucket_pairs (skew guard there)
+    over struct(id, simhash) members; hamming is computed per pair after
+    the expansion."""
     if band_bits is None:
         band_bits = max(64 // (max_hamming + 1), 1)
     bands = sigs.select(
@@ -231,42 +245,22 @@ def simhash_near_pairs(
                         F.lit(b).cast("int").alias("band"),
                         F.shiftright(F.col("simhash"), b * band_bits)
                         .bitwiseAND(F.lit((1 << band_bits) - 1))
-                        .alias("key"),
+                        .alias("bucket"),
                     )
                     for b in range(64 // band_bits)
                 ]
             )
         ).alias("bb"),
-    ).select("id", "simhash", "bb.band", "bb.key")
-    buckets = (
-        bands.groupBy("band", "key")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("id"), F.col("simhash")))
-            ).alias("members")
-        )
-        .filter(F.size("members") >= 2)
-        # over-cap buckets: deterministic truncation, not a drop (docstring)
-        .withColumn("members", F.slice("members", 1, MAX_BLOCK_SIZE))
-    )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("members"),
-            lambda x, i: F.transform(
-                F.slice(F.col("members"), i + F.lit(2), F.size("members")),
-                lambda y: F.struct(
-                    x["id"].alias("id_a"),
-                    y["id"].alias("id_b"),
-                    F.bit_count(x["simhash"].bitwiseXOR(y["simhash"])).alias(
-                        "hamming"
-                    ),
-                ),
+    ).select("id", "simhash", "bb.band", "bb.bucket")
+    pairs = _bucket_pairs(bands, F.struct(F.col("id"), F.col("simhash")))
+    return (
+        pairs.select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias(
+                "hamming"
             ),
         )
-    )
-    return (
-        buckets.select(F.explode(pair_arr).alias("p"))
-        .select("p.id_a", "p.id_b", "p.hamming")
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )

@@ -315,9 +315,3 @@ def analyze_sentences(docs: DataFrame, pred_vocab: list[str]) -> DataFrame:
                 yield pd.DataFrame(out, columns=cols)
 
     return docs.select("url", "text").mapInPandas(batches, schema=SENTENCES_SCHEMA)
-
-
-def doc_sentence_counts(sentences: DataFrame) -> DataFrame:
-    """(url, n_sents) from the sentence table — partial aggregation
-    (map-side combine) is automatic for count()."""
-    return sentences.groupBy("url").agg(F.count("*").cast("int").alias("n_sents"))

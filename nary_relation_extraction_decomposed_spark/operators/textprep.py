@@ -63,26 +63,32 @@ def dedup_latest_text(docs: DataFrame, num_partitions: int | None = None) -> Dat
     corpus). Two wins over the window: no per-partition sort, and partial
     (map-side) aggregation collapses a url's duplicate crawls BEFORE the
     exchange — the window shape ships every replica's full text through
-    the shuffle (guide: aggregate before you shuffle)."""
+    the shuffle (guide: aggregate before you shuffle).
+
+    Payload columns (any beyond url, warc_ts, text) ride in the max()
+    struct, so they must be of orderable types (no maps); their names may
+    contain dots."""
     if num_partitions:
         docs = docs.repartition(num_partitions, "url")
     # any non-key payload columns ride in the struct AFTER the three
     # ordering fields: they only influence the pick on a full ordering tie
     # (equal texts), where the window's pick was sort-stability-dependent —
-    # the struct max is deterministic there too
+    # the struct max is deterministic there too. Payload names are quoted
+    # and fetched with getField: a dotted name is one column, not a path.
     extra = [c for c in docs.columns if c not in ("url", "warc_ts", "text")]
     best = F.max(
         F.struct(
             F.col("warc_ts"),
             F.length(F.col("text")).alias("_len"),
             F.col("text"),
-            *[F.col(c) for c in extra],
+            *[F.col(f"`{c}`") for c in extra],
         )
     ).alias("_b")
     out = docs.groupBy("url").agg(best).select(
-        "url", "_b.warc_ts", "_b.text", *[f"_b.{c}" for c in extra]
+        "url", "_b.warc_ts", "_b.text",
+        *[F.col("_b").getField(c).alias(c) for c in extra],
     )
-    return out.select(*docs.columns)
+    return out.select(*[F.col(f"`{c}`") for c in docs.columns])
 
 
 def resolve_text(pages: DataFrame, metrics: dict | None = None) -> DataFrame:

@@ -105,6 +105,32 @@ def test_quality_score_null_text_is_null(spark):
     assert twin == got
 
 
+def test_curate_layers_called_through_module_globals(corpus, monkeypatch):
+    """curate_corpus reaches its near-dup layers through curate's module
+    globals, so a wrapper patched onto each (as a traced benchmark run
+    does) sees exactly one call per curate_corpus."""
+    from nary_relation_extraction_decomposed_spark.operators import curate
+
+    calls = {}
+
+    def counting(name):
+        orig = getattr(curate, name)
+
+        def wrapper(*args, **kwargs):
+            calls[name] = calls.get(name, 0) + 1
+            return orig(*args, **kwargs)
+
+        monkeypatch.setattr(curate, name, wrapper)
+
+    names = ("minhash_signatures_wide", "minhash_pairs_from_sigs",
+             "connected_components")
+    for name in names:
+        counting(name)
+    out = curate.curate_corpus(corpus, min_quality=0.05)
+    assert _ids(out["neardup"]) == [1, 6, 7]
+    assert calls == dict.fromkeys(names, 1)
+
+
 def test_neardup_verification_threshold(corpus):
     # a threshold above 1.0 can never be met, so every LSH candidate pair
     # is rejected at verification and the near-dup stage drops nothing

@@ -177,3 +177,20 @@ def test_dedup_idempotence(spark, inputs):
     a = {tuple(r) for r in once.select("url", "warc_ts").collect()}
     b = {tuple(r) for r in twice.select("url", "warc_ts").collect()}
     assert a == b
+
+
+def test_dedup_latest_text_dotted_payload_column(spark):
+    """A payload column whose name contains a dot is one column, not a
+    struct path: it rides through the latest-per-url pick unchanged."""
+    from nary_relation_extraction_decomposed_spark.operators.textprep import (
+        dedup_latest_text,
+    )
+
+    docs = spark.createDataFrame(
+        [("u1", 1, "old", "a"), ("u1", 2, "new", "b"), ("u2", 1, "x", "c")],
+        "url string, warc_ts long, text string, `meta.src` string",
+    ).withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
+    out = dedup_latest_text(docs)
+    assert out.columns == docs.columns
+    assert sorted((r["url"], r["text"], r["meta.src"]) for r in out.collect()) == [
+        ("u1", "new", "b"), ("u2", "x", "c")]

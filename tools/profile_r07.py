@@ -64,6 +64,10 @@ def _er_surfaces(spark):
 
 
 def profile_er(spark):
+    from nary_relation_extraction_decomposed_spark.functions.textnorm import (
+        JACCARD_THRESHOLD,
+        shingles_col,
+    )
     from nary_relation_extraction_decomposed_spark.operators import er
     from nary_relation_extraction_decomposed_spark.operators.connected_components import (
         connected_components,
@@ -81,14 +85,11 @@ def profile_er(spark):
     )
     cand = er.lsh_candidate_pairs(sigs_ck, "surface_norm")
     timed(spark, "er.lsh_pairs_noop", lambda: noop(cand))
-    pairs = er.verify_pairs(er.lsh_candidate_pairs(sigs_ck, "surface_norm"),
-                            sigs_ck, "surface_norm")
-    timed(spark, "er.verified_noop", lambda: noop(pairs))
-    ids = sigs_ck.select(F.col("surface_norm"), F.xxhash64(F.col("surface_norm")).alias("node"))
-    edges = (
-        pairs.join(ids.withColumnRenamed("surface_norm", "a").withColumnRenamed("node", "src"), "a")
-        .join(ids.withColumnRenamed("surface_norm", "b").withColumnRenamed("node", "dst"), "b")
-        .select("src", "dst")
+    # verify + node ids: the projection canonical_map applies
+    sh_a, sh_b = shingles_col(F.col("a")), shingles_col(F.col("b"))
+    jac = F.size(F.array_intersect(sh_a, sh_b)) / F.size(F.array_union(sh_a, sh_b))
+    edges = cand.filter(jac >= F.lit(JACCARD_THRESHOLD)).select(
+        F.xxhash64("a").alias("src"), F.xxhash64("b").alias("dst")
     )
     timed(spark, "er.edges_noop", lambda: noop(edges))
     comps = timed(
