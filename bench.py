@@ -133,9 +133,11 @@ def _run_kg(spark, pages, gaz_df, width: int) -> tuple[int, int]:
 
     SPARK_GRAFT_KG_FUSION=pairs (default) -> fused_rejoin=True, the
     round-6 triples-only fast lane (ONE doc mapInPandas, support agg is
-    the only corpus exchange); =combined -> the r5 staged decompose/rejoin,
-    kept selectable for A/B. SPARK_GRAFT_KG_DEDUP=skip is the diagnostic
-    that isolates the latest-per-url text shuffle (never the headline).
+    the only corpus exchange); =combined -> fused_rejoin=False, the same
+    stages with the doc pass emitting every row kind (sentences and
+    evidence too), kept selectable for A/B. SPARK_GRAFT_KG_DEDUP=skip is
+    the diagnostic that isolates the latest-per-url text shuffle (never
+    the headline).
     Canonicalization is off: the bench gazetteer's closed vocabulary has
     nothing to canonicalize (er_canon measures that stage)."""
     from nary_relation_extraction_decomposed_spark.plans.pipeline import (

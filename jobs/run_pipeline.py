@@ -11,6 +11,9 @@ Launch (sandbox scaling evidence — N vs 4N cores):
 
 The job is kill-resumable: rerunning with the same --checkpoint skips every
 committed stage (see plans/checkpoint.py) and prints per-stage manifests.
+Without --checkpoint it prints the extraction counts instead (docs_in,
+from_html, provided_text, empty_text), observed in the JVM over the
+resolved pages (textprep.resolve_text).
 """
 
 from __future__ import annotations
@@ -99,6 +102,7 @@ def main() -> None:
                   else TOKEN_WINDOW)
         ),
         fused_rejoin=args.fused_rejoin,
+        collect_metrics=not args.checkpoint,
     )
 
     t0 = time.time()
@@ -113,9 +117,7 @@ def main() -> None:
             for s, st in ck.stats.items()
         }
     else:
-        from dataclasses import replace
-
-        result = run_pipeline(pages, gaz, rules, replace(config, collect_metrics=True))
+        result = run_pipeline(pages, gaz, rules, config)
         stage_stats = {}
 
     out_triples = result.triples
@@ -132,9 +134,7 @@ def main() -> None:
     n_triples = spark.read.parquet(os.path.join(args.output, "triples")).count()
     n_docs = result.docs.count()
     wall = time.time() - t0
-    extract_metrics = (
-        {k: v.value for k, v in result.metrics.items()} if result.metrics else {}
-    )
+    extract_metrics = result.metrics.get if result.metrics is not None else {}
     print(json.dumps({
         "n_prev_triples": n_prev,
         "n_docs": n_docs,

@@ -96,9 +96,10 @@ def minhash_agg(
     codegen'd — at doc scale (100s of shingles x 64 perms) it is ~50x
     slower. explode + groupBy keeps every hash and min inside whole-stage
     codegen; partial aggregation makes the shuffle tiny (num_perms longs
-    per key). Values are bit-identical to the spec twin's."""
+    per key). Values are bit-identical to the spec twin's. Each aggregate
+    is one SQL expression: one Py4J call instead of four Column calls."""
     exploded = df.select(key, F.explode(grams).alias("g"))
-    aggs = [F.min(F.xxhash64("g", F.lit(i))).alias(f"h{i}") for i in range(num_perms)]
+    aggs = [F.expr(f"min(xxhash64(g, {i})) AS h{i}") for i in range(num_perms)]
     return exploded.groupBy(exploded.columns[0]).agg(*aggs)
 
 

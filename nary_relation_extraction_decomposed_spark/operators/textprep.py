@@ -8,7 +8,9 @@ Scale notes:
   break run-to-run determinism.
 - resolve_text is the only stage that touches the (huge, binary) html column;
   its output drops html immediately so every downstream shuffle moves text
-  only (column pruning at the source reads html just for this stage).
+  only (column pruning at the source reads html just for this stage). Only
+  text-null rows cross into Python, and its optional extraction counts are
+  a JVM-side observation of the same plan.
 """
 
 from __future__ import annotations
@@ -17,7 +19,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 
 from ..extract.html import extract_text
 
@@ -30,20 +32,6 @@ def filter_pages(pages: DataFrame, lang: str = "en") -> DataFrame:
         (F.col("lang") == lang)
         & (F.col("text").isNotNull() | F.col("html").isNotNull())
     )
-
-
-def make_extract_metrics(spark) -> dict:
-    """Named accumulators for the extraction stage — per-task operational
-    metrics (rows seen, extracted-from-html vs provided-text, empties),
-    aggregated by Spark across all partitions; surfaced by
-    jobs/run_pipeline.py next to the per-partition manifest lineage."""
-    sc = spark.sparkContext
-    return {
-        "docs_in": sc.accumulator(0),
-        "from_html": sc.accumulator(0),
-        "provided_text": sc.accumulator(0),
-        "empty_text": sc.accumulator(0),
-    }
 
 
 def dedup_latest_text(docs: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -91,71 +79,49 @@ def dedup_latest_text(docs: DataFrame, num_partitions: int | None = None) -> Dat
     return out.select(*[F.col(f"`{c}`") for c in docs.columns])
 
 
-def resolve_text(pages: DataFrame, metrics: dict | None = None) -> DataFrame:
+def resolve_text(pages: DataFrame, observation: Observation | None = None) -> DataFrame:
     """(url, warc_ts, html, text, ...) -> (url, warc_ts, text) where text =
     provided text if non-null else the frozen extractor over html.
 
-    mapInPandas (Arrow batches) — the extraction kernel is the byte-identity
-    invariant holder, so it must be the in-repo frozen Python; batches keep
-    the JVM<->Python crossing amortized and html never leaves this stage.
+    Rows that already CARRY text never cross the Python boundary: they are
+    a pure JVM projection unioned with the extractor branch, which sees
+    only the text-null rows and only their (url, warc_ts, html). The
+    extractor is mapInPandas (Arrow batches) because the extraction kernel
+    is the byte-identity invariant holder, so it must be the in-repo
+    frozen Python. When `text` is a literal NULL, Catalyst folds the
+    provided-text branch away, so no second scan survives. Row ORDER
+    across the union is unspecified; every consumer (latest-per-url dedup,
+    groupBys, the oracle's order-insensitive compare) is order-independent.
 
-    r7 fast path (metrics off): rows that already CARRY text never cross
-    the Python boundary at all — they are a pure JVM projection unioned
-    with the extractor branch, which sees only the text-null rows and only
-    the (url, warc_ts, html) columns. A provided-text corpus thus pays
-    zero Arrow serialization of html/text; an all-html corpus is unchanged
-    (and when `text` is a literal NULL, Catalyst folds the provided-text
-    branch away entirely, so no second scan survives). Row ORDER across
-    the union differs from the single-pass shape but every consumer
-    (latest-per-url dedup window, groupBys, the oracle's order-insensitive
-    compare) is order-independent. The metrics path keeps the single-pass
-    shape: its accumulators count provided vs extracted rows in-UDF.
+    With `observation`, the union is observed in the JVM: docs_in,
+    from_html, provided_text and empty_text (null or ''), readable through
+    `observation.get` once the first action over the output has run.
     """
-    if metrics is None:
-        with_text = pages.filter(F.col("text").isNotNull()).select(
-            "url", "warc_ts", "text"
-        )
-        need = pages.filter(F.col("text").isNull()).select(
-            "url", "warc_ts", "html"
-        )
+    with_text = pages.filter(F.col("text").isNotNull()).select(
+        "url", "warc_ts", "text", F.lit(True).alias("_provided")
+    )
+    need = pages.filter(F.col("text").isNull()).select("url", "warc_ts", "html")
 
-        def extract_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                yield pd.DataFrame(
-                    {
-                        "url": pdf["url"],
-                        "warc_ts": pdf["warc_ts"],
-                        "text": [extract_text(h) for h in pdf["html"]],
-                    }
-                )
-
-        return with_text.unionByName(
-            need.mapInPandas(extract_batches, schema=RESOLVED_SCHEMA)
-        )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def extract_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            texts = []
-            n_provided = 0
-            n_empty = 0
-            for t, h in zip(pdf["text"], pdf["html"]):
-                if isinstance(t, str) and t is not None:
-                    out = t
-                    n_provided += 1
-                else:
-                    out = extract_text(h)
-                if not out:
-                    n_empty += 1
-                texts.append(out)
-            if metrics is not None:
-                metrics["docs_in"] += len(pdf)
-                metrics["provided_text"] += n_provided
-                metrics["from_html"] += len(pdf) - n_provided
-                metrics["empty_text"] += n_empty
             yield pd.DataFrame(
-                {"url": pdf["url"], "warc_ts": pdf["warc_ts"], "text": texts}
+                {
+                    "url": pdf["url"],
+                    "warc_ts": pdf["warc_ts"],
+                    "text": [extract_text(h) for h in pdf["html"]],
+                }
             )
 
-    return pages.select("url", "warc_ts", "html", "text").mapInPandas(
-        batches, schema=RESOLVED_SCHEMA
-    )
+    extracted = need.mapInPandas(extract_batches, schema=RESOLVED_SCHEMA)
+    out = with_text.unionByName(extracted.withColumn("_provided", F.lit(False)))
+    if observation is not None:
+        out = out.observe(
+            observation,
+            F.count(F.lit(1)).alias("docs_in"),
+            F.count_if(~F.col("_provided")).alias("from_html"),
+            F.count_if(F.col("_provided")).alias("provided_text"),
+            F.count_if(
+                F.col("text").isNull() | (F.col("text") == "")
+            ).alias("empty_text"),
+        )
+    return out.drop("_provided")

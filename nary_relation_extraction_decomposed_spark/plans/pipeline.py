@@ -34,7 +34,7 @@ from collections.abc import Callable
 from dataclasses import dataclass
 from functools import partial
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 
 from ..operators import er, graph, textprep, triples as T
 from ..operators.kernels import MAX_PATH_LEN, TOKEN_WINDOW
@@ -71,6 +71,8 @@ class PipelineConfig:
     # partitioning floor for Python-heavy stages (None -> 2x cores); see
     # operators/graph.py on why AQE byte-coalescing must not size these
     python_parallelism: int | None = None
+    # observe the extraction counts (textprep.resolve_text) in the JVM;
+    # PipelineResult.metrics then holds the Observation
     collect_metrics: bool = False
 
     def __post_init__(self):
@@ -93,7 +95,9 @@ class PipelineResult:
     pairs: DataFrame
     canon_map: DataFrame | None
     triples: DataFrame
-    metrics: dict | None = None  # extraction accumulators (read after action)
+    # extraction counts (docs_in, from_html, provided_text, empty_text):
+    # `.get` blocks until the first action over docs has run
+    metrics: Observation | None = None
 
 
 @dataclass(frozen=True)
@@ -140,7 +144,7 @@ def _stages(
     gazetteer: DataFrame,
     pred_rules: DataFrame,
     config: PipelineConfig,
-    metrics: dict | None = None,
+    observation: Observation | None = None,
 ) -> list[Stage]:
     """The KG stage list for `config`, in build order (module docstring)."""
     width = config.python_parallelism or (
@@ -152,10 +156,9 @@ def _stages(
         # Extract FIRST (map-only, html never shuffles), THEN dedup latest
         # per url on text rows — at web scale html is 5-20x the text, so
         # this keeps the wide shuffle small at the cost of extracting the
-        # few % duplicate crawls (accumulator caveat: task retries can
-        # overcount; the checkpointed runner's manifest rows are exact).
+        # few % duplicate crawls.
         pre = textprep.filter_pages(pages, config.lang)
-        resolved = textprep.resolve_text(pre, metrics=metrics)
+        resolved = textprep.resolve_text(pre, observation=observation)
         if config.dedup_mode == "skip":
             # the dedup's repartition doubled as the Python-stage width
             # pin; without it, only top up when the source is
@@ -200,7 +203,7 @@ def _add(frames: dict, stage: Stage, df: DataFrame) -> None:
         frames.update(stage.views(df))
 
 
-def _result(frames: dict, metrics: dict | None) -> PipelineResult:
+def _result(frames: dict, metrics: Observation | None = None) -> PipelineResult:
     return PipelineResult(
         docs=frames["docs"],
         mentions=frames.get("mentions"),
@@ -214,12 +217,6 @@ def _result(frames: dict, metrics: dict | None) -> PipelineResult:
     )
 
 
-def _metrics(pages: DataFrame, config: PipelineConfig) -> dict | None:
-    if not config.collect_metrics:
-        return None
-    return textprep.make_extract_metrics(pages.sparkSession)
-
-
 def run_pipeline(
     pages: DataFrame,
     gazetteer: DataFrame,
@@ -228,7 +225,7 @@ def run_pipeline(
 ) -> PipelineResult:
     """Build every stage of _stages in order; docs and combined
     are persisted (each feeds several consumers)."""
-    metrics = _metrics(pages, config)
+    metrics = Observation() if config.collect_metrics else None
     frames: dict[str, DataFrame] = {}
     for stage in _stages(pages, gazetteer, pred_rules, config, metrics):
         df = stage.build(frames)
@@ -259,7 +256,15 @@ def run_pipeline_checkpointed(
     root with an edited dim recomputes exactly the affected suffix instead
     of replaying stale results. Both dims are broadcast-class by design;
     pass a precomputed gaz_fp/rules_fp version tag to skip the content
-    scan for unusually large sides."""
+    scan for unusually large sides.
+
+    collect_metrics is rejected: a skipped docs stage would never fire the
+    observation, and the stage manifests already hold each stage's rows."""
+    if config.collect_metrics:
+        raise ValueError(
+            "collect_metrics is not supported with checkpointing; "
+            "read the stage manifests' n_rows instead"
+        )
     from .checkpoint import StageCheckpointer, content_fingerprint, fingerprint
 
     ck = StageCheckpointer(pages.sparkSession, ckpt_root)
@@ -268,13 +273,12 @@ def run_pipeline_checkpointed(
         "gazetteer": gaz_fp or content_fingerprint(gazetteer),
         "rules": rules_fp or content_fingerprint(pred_rules),
     }
-    metrics = _metrics(pages, config)
     frames: dict[str, DataFrame] = {}
-    for stage in _stages(pages, gazetteer, pred_rules, config, metrics):
+    for stage in _stages(pages, gazetteer, pred_rules, config):
         df, fps[stage.name] = ck.run_stage(
             stage.name,
             fingerprint(*(fps[p] for p in stage.parents)),
             partial(stage.build, frames),
         )
         _add(frames, stage, df)
-    return _result(frames, metrics), ck
+    return _result(frames), ck

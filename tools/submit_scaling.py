@@ -18,7 +18,7 @@ Method matches the gate method (BENCH/BASELINE.md round-2 onward):
   - SPARK_LOCAL_DIRS on tmpfs (per-node NVMe stand-in);
   - per-run steal%% from /proc/stat;
   - host multiprocessing 4->16 ceiling probed before and after the draws
-    (the launch predictor that held twice in round 6 — window_watch.py);
+    (the launch predictor that held twice in round 6);
   - decisive pair back-to-back per corpus; two corpus sizes so the
     marginal efficiency cancels the ~15-25 s single-node fixed costs that
     a 10^12-row run amortizes to nothing. Corpora here are sized for a
